@@ -253,9 +253,10 @@ def _final_line(totals: dict, best: dict, ext_best: dict,
     Headline and fresh keys are always itemized (the r01 contract's
     "queries" map may gain entries but never lose them); extended keys
     itemize per _ITEMIZED_EXTENDED with the rest folded into
-    queries_rest. A safety loop drops the lightest itemized EXTENDED
-    keys into the fold if value digits ever push the line past
-    _TAIL_BUDGET (headline/fresh are never dropped)."""
+    queries_rest. A safety loop drops itemized EXTENDED keys into the
+    fold, in reverse _ITEMIZED_EXTENDED order, if value digits ever push
+    the line past _TAIL_BUDGET — so the surviving set never depends on
+    the run's timings (headline/fresh are never dropped)."""
     itemized_ext = {
         k: round(ext_best[k], 2) for k in _ITEMIZED_EXTENDED if k in ext_best
     }
@@ -277,8 +278,7 @@ def _final_line(totals: dict, best: dict, ext_best: dict,
 
     line = _emit()
     while len(line) > _TAIL_BUDGET and itemized_ext:
-        drop = min(itemized_ext, key=itemized_ext.get)
-        itemized_ext.pop(drop)
+        drop, _ = itemized_ext.popitem()
         queries.pop(drop)
         line = _emit()
     return line

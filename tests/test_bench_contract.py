@@ -79,3 +79,19 @@ def test_final_line_overflow_folds_extended_only():
     q = json.loads(line)["queries"]
     for k in (*bench.HEADLINE, *bench.FRESH):
         assert k in q
+
+    # the keys folded on overflow are the tail of _ITEMIZED_EXTENDED,
+    # whatever the timings: ascending and descending values of one print
+    # width must keep the same list prefix
+    order = [k for k in bench._ITEMIZED_EXTENDED if k in ext]
+    kept_sets = []
+    for sign in (1, -1):
+        timed = {k: 99950.0 + sign * 0.1 * i for i, k in enumerate(ext)}
+        line = bench._final_line(_totals(), wide, timed, wide_fresh)
+        assert len(line) <= bench._TAIL_BUDGET
+        q = json.loads(line)["queries"]
+        kept = [k for k in order if k in q]
+        assert 0 < len(kept) < len(order), "timings must overflow the budget"
+        assert kept == order[: len(kept)], "dropped keys are not the list's tail"
+        kept_sets.append(kept)
+    assert kept_sets[0] == kept_sets[1]

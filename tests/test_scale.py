@@ -111,8 +111,7 @@ def test_frame_sample_plan_has_no_exchange(spark):
     """multimodal_frame_sample is scan → project → ArrowEvalPython/mapInPandas
     — no Exchange anywhere (the r02 spread() repartition was pure overhead for
     the microsecond-per-row stub stage and was the whole 2x bench creep the
-    r04 verdict flagged; a real decoder opts back in via
-    documents_as_media(parallel=True))."""
+    r04 verdict flagged; a real decoder spreads its own input)."""
     from unfccc_documents_database_sandbox_spark.registry import load_all_plans, lookup
 
     load_all_plans()

@@ -46,6 +46,8 @@ _TABLE_CACHE: dict[tuple[SparkSession, str, str], DataFrame] = {}
 _VIEWS_REGISTERED: dict[SparkSession, str] = {}
 _TUNE_LOGGED: set[SparkSession] = set()
 _PYFILES_SHIPPED: set[str] = set()
+# frames persisted by `hold` since the last registry build started
+_HELD: list[DataFrame] = []
 
 
 def _is_stopped(spark: SparkSession) -> bool:
@@ -187,38 +189,69 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     _VIEWS_REGISTERED[spark] = sf_dir
 
 
-def pin(df: DataFrame, eager: bool = True) -> DataFrame:
+def hold(df: DataFrame) -> DataFrame:
+    """Lazily persist a cross-consumer intermediate and record it with the
+    session-wide owner; returns the persisted frame.
+
+    Lifecycle invariant: a held frame stays cached until the next registry
+    build starts (``registry.register`` wraps every builder in
+    ``release()``), so one key's caches never outlive the key that follows
+    it. A frame released while a plan that reads it is still unexecuted
+    stays correct: Spark recomputes it from lineage. Not thread-safe; the
+    driver is single-threaded by design."""
+    df = df.persist()
+    _HELD.append(df)
+    return df
+
+
+def release() -> None:
+    """Unpersist every frame ``hold`` recorded, skipping frames whose
+    session has stopped (their blocks went with it)."""
+    while _HELD:
+        df = _HELD.pop()
+        if not _is_stopped(df.sparkSession):
+            df.unpersist()
+
+
+def pin(df: DataFrame) -> DataFrame:
     """Materialize and lineage-truncate a multi-consumer intermediate —
     the engine's single eager-pin point (used as ``.transform(pin)`` so
     call sites keep their chaining shape).
 
     Why pin at all (guide §5): a lazy ``persist()`` whose consumers all
     sit inside ONE downstream job makes the concurrent stages race to
-    fill the cache — each racer re-runs the whole upstream chain (the
-    r17 measurement: one bench pass spent 29 s on stages that sum to
-    ~0.3 s). An eager checkpoint materializes sequentially once and
-    every consumer reads the stored blocks.
+    fill the cache — each racer re-runs the whole upstream chain. An
+    eager checkpoint materializes sequentially once and every consumer
+    reads the stored blocks.
 
-    Fault-tolerance routing (VERDICT r17 #3/#5): ``localCheckpoint``
-    stores blocks on executors with NO lineage — one lost executor makes
-    the job unrecoverable, and the blocks are freed only by driver GC.
-    That is the right trade in local/bench sessions (no executor loss,
-    no distributed FS round-trip). At cluster scale, a session that
-    configured ``spark.sparkContext.setCheckpointDir(...)`` is asking
-    for fault-tolerant materialization, so pin routes through RELIABLE
+    Lifecycle invariant: a pinned frame lives until it is dropped — its
+    blocks are freed by the driver's reference cleaner, never by
+    ``release()``. A checkpoint has no lineage, so releasing it while a
+    frame built on it is still unexecuted would make that frame FAIL
+    rather than recompute; callers may build a key twice before
+    collecting either.
+
+    Fault-tolerance routing: ``localCheckpoint`` stores blocks on
+    executors with NO lineage — one lost executor makes the job
+    unrecoverable. That is the right trade in local/bench sessions (no
+    executor loss, no distributed FS round-trip). A session that
+    configured ``spark.sparkContext.setCheckpointDir(...)`` is asking for
+    fault-tolerant materialization, so pin routes through RELIABLE
     ``checkpoint()`` there: blocks live on the checkpoint FS and survive
-    executor loss. One switch here, not ~40 per-call-site decisions."""
+    executor loss. Spark deletes those files only when the session sets
+    ``spark.cleaner.referenceTracking.cleanCheckpoints=true``; without it
+    every pin leaves its files on the checkpoint FS."""
     sc = df.sparkSession.sparkContext
     try:
         ck_dir = sc.getCheckpointDir()
     except Exception:
         ck_dir = None
     if ck_dir:
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        return df.checkpoint()
+    return df.localCheckpoint()
 
 
-def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Repartition to the session's default parallelism BEFORE a
     compute-bound narrow stage (shingle explode, per-row digest,
     mapInPandas inference/decode) — but only when the input is actually
@@ -233,14 +266,13 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     rows. Results are unaffected — every consumer either aggregates by key
     or is row-local.
 
-    Adaptive guard (r05): when the planned input already has at least half
+    Adaptive guard: when the planned input already has at least half
     the target partition count — the normal case on a real cluster, where
     a large table scans as thousands of row-group splits — spread is a
     NO-OP. The unconditional form would shuffle the whole corpus at 100 TB
     to fix a skew that doesn't exist; the guard keeps the bench fix from
     becoming a cluster regression."""
-    sc = df.sparkSession.sparkContext
-    target = partitions or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         current = df.rdd.getNumPartitions()
     except Exception:

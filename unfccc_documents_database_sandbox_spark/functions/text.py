@@ -38,15 +38,6 @@ def shingles(text: Column | str, n: int = 3) -> Column:
     )
 
 
-def token_count_ws(text: Column | str) -> Column:
-    return F.size(words(text)).cast("long")
-
-
-def token_count_regex(text: Column | str, pattern: str = "[a-z]+") -> Column:
-    """BPE-ish sub-token count via regex pieces."""
-    return F.size(F.regexp_extract_all(text, F.lit(pattern), 0)).cast("long")
-
-
 def stopword_ratio(text: Column | str) -> Column:
     w = words(text)
     stop = F.array(*[F.lit(s) for s in STOPWORDS])

@@ -52,14 +52,6 @@ def exact_dedup(df: DataFrame, key: str = "text", id_col: str = "doc_id") -> Dat
     return df.groupBy(key).agg(F.min(id_col).alias(id_col)).select(id_col, key)
 
 
-def tokenize_distinct(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, token) distinct token sets — shared by MinHash and Jaccard."""
-    return (
-        docs.select(id_col, F.explode(F.split(F.col(text_col), " ")).alias("token"))
-        .distinct()
-    )
-
-
 def shingles_distinct(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -101,27 +93,22 @@ def shingles_raw(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    spread_input: bool = True,
     portable_hash_digits: int | None = None,
 ) -> DataFrame:
     """(id, token) hashed n-word shingles WITHOUT dedup — no shuffle at all.
     Sufficient wherever the consumer is multiset-invariant (MinHash: the min
-    over duplicates equals the min over the set) or dedups after a prune.
-
-    ``spread_input=False`` skips the repartition for callers that already
-    hold a spread (and possibly persisted) doc slice."""
+    over duplicates equals the min over the set) or dedups after a prune."""
     from unfccc_documents_database_sandbox_spark.catalog import spread
     from unfccc_documents_database_sandbox_spark.functions.text import shingles
 
     # repartition the compact doc rows before the shingle fan-out: the scan
     # is row-group-bound (1 partition on the bench corpus) and the explode +
     # xxhash64 is the CPU-heavy part of the whole minhash pipeline.
-    base = spread(docs) if spread_input else docs
     if portable_hash_digits is None:
         hashed = F.xxhash64("s")
     else:
         hashed = portable_shingle_hash("s", portable_hash_digits)
-    return base.select(
+    return spread(docs).select(
         id_col, F.explode(shingles(F.col(text_col), n)).alias("s")
     ).select(id_col, hashed.alias("token"))
 
@@ -247,85 +234,11 @@ def lsh_candidates(
     )
 
 
-# at most one live generation of verify-stage caches per process (see
-# jaccard_verify): the pruned token set + the candidate pair set (+ the
-# pre-fan-out doc slice when minhash_near_dups owns the generation).
-# CONTRACT (plans/graph.py twin): consume a pipeline's result before
-# starting the next — interleaved/concurrent builds stay CORRECT (lineage
-# recomputes) but the earlier one loses its cache reuse; not thread-safe,
-# single-threaded driver by design.
-_PERSISTED_TOKENS: list[DataFrame] = []
-
-
-def _evict_generation() -> None:
-    """Unpersist the previous pipeline invocation's caches. Results are
-    lazy, so a call can't unpersist its own caches at return; instead each
-    new pipeline invocation evicts its predecessor's — repeated runs in one
-    session (bench loop, parity sweep, driver gate) hold at most one
-    generation, not a monotonically growing leak."""
-    while _PERSISTED_TOKENS:
-        _PERSISTED_TOKENS.pop().unpersist()
-
-
-def jaccard_verify(
-    candidates: DataFrame,
-    tokens: DataFrame,
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    _owns_generation: bool = True,
-) -> DataFrame:
-    """Exact Jaccard over candidate pairs only: |A∩B| via token equi-join
-    restricted to candidates (semi-filtered), |A∪B| = |A|+|B|-|A∩B|.
-
-    The semi-join prune matters at scale: LSH yields few candidate docs, so
-    the token⋈token join runs over a tiny broadcast-filtered slice of the
-    corpus instead of every document's shingle set."""
-    if _owns_generation:
-        _evict_generation()
-    # candidates feed THREE consumers (the two cand_ids projections and the
-    # intersection join); unpersisted, each consumer re-executes the whole
-    # LSH band self-join upstream. The pair set is collision-bounded and
-    # tiny — persist it so the expensive candidate generation runs once.
-    candidates = candidates.persist()
-    _PERSISTED_TOKENS.append(candidates)
-    cand_ids = (
-        candidates.select(F.col("id_a").alias(id_col))
-        .unionByName(candidates.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    # the pruned token set feeds three plans (sizes, both join sides) — persist
-    # it so the shingle explode runs once, not three times; it is
-    # candidate-docs-only, so small even when the corpus is not. The
-    # distinct sits AFTER the prune so callers may pass raw (multiset)
-    # tokens without paying a corpus-wide dedup shuffle.
-    tokens = (
-        tokens.join(F.broadcast(cand_ids), id_col, "left_semi").distinct().persist()
-    )
-    _PERSISTED_TOKENS.append(tokens)
-    sizes = tokens.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    ta = tokens.withColumnRenamed(id_col, "id_a")
-    tb = tokens.withColumnRenamed(id_col, "id_b")
-    inter = (
-        candidates.join(ta, "id_a")
-        .join(tb, ["id_b", "token"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    return (
-        inter.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-        .withColumn("jaccard", F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
-
-
 def jaccard_verify_sets(
     candidates: DataFrame,
     docsets: DataFrame,
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    _owns_generation: bool = True,
 ) -> DataFrame:
     """Exact Jaccard over candidate pairs using per-doc distinct hash-set
     ARRAYS (``shingle_hash_sets``): |A∩B| = size(array_intersect), row-local
@@ -344,8 +257,6 @@ def jaccard_verify_sets(
     corpus_curation_v2 A/B pathology; one bench pass measured 29 s on
     the race where the pipeline's stages sum to ~0.3 s). Same
     compute-once guarantee, sequential materialization."""
-    if _owns_generation:
-        _evict_generation()
     # the pair set feeds the prune AND both hset joins — pin it so the
     # bucket-collect candidate generation runs once (it is collision-bounded
     # and tiny)
@@ -397,9 +308,6 @@ def minhash_near_dups(
         )
     from unfccc_documents_database_sandbox_spark.catalog import spread
 
-    # This invocation owns the persist generation (evict the previous one
-    # BEFORE persisting anything new, so the verify stage can't evict ours).
-    _evict_generation()
     # ONE pinned intermediate for the whole pipeline: the per-doc distinct
     # shingle-hash set as a row-local array (spread across executors before
     # the CPU-heavy hashing — the scan is row-group-bound). Signatures fold
@@ -418,7 +326,7 @@ def minhash_near_dups(
     ).transform(pin)
     sigs = minhash_signatures_rowlocal(docsets, id_col, num_hashes)
     cands = lsh_candidates(sigs, id_col, bands, rows)
-    return jaccard_verify_sets(cands, docsets, id_col, threshold, _owns_generation=False)
+    return jaccard_verify_sets(cands, docsets, id_col, threshold)
 
 
 def connected_components(

@@ -35,24 +35,18 @@ DECODED_SCHEMA = T.StructType(
 )
 
 
-def documents_as_media(docs: DataFrame, parallel: bool = False) -> DataFrame:
+def documents_as_media(docs: DataFrame) -> DataFrame:
     """Project the corpus into media shape: text bytes as the opaque
     payload, typed metadata alongside (stands in for image/audio blobs).
 
-    ``parallel=True`` spreads the rows across the cores first — pass it
-    when the consuming Arrow stage is genuinely CPU-heavy (a real
-    PIL/ffmpeg decoder), because mapInPandas parallelism equals the
-    partition count and a row-group-bound scan may hand it ONE partition.
-    The default skips the exchange: the stub decode/frame/feature stages
-    in this container do microseconds of work per row, so the repartition
-    plus 32-task scheduling costs more than single-partition execution at
-    any tested SF (bisected r05: spread was the whole 2× creep of
-    multimodal_frame_sample, VERDICT r04 #4), and at production scale the
-    scan is already row-group-parallel, making the exchange redundant."""
-    from unfccc_documents_database_sandbox_spark.catalog import spread
-
-    base = spread(docs) if parallel else docs
-    return base.select(
+    No repartition: the stub decode/frame/feature stages do microseconds
+    of work per row, so a spread plus 32-task scheduling
+    costs more than single-partition execution at any tested SF (bisected:
+    spread was the whole 2× creep of multimodal_frame_sample), and at
+    production scale the scan is already row-group-parallel. A genuinely
+    CPU-heavy decoder (PIL/ffmpeg) should apply ``catalog.spread`` to its
+    input, because mapInPandas parallelism equals the partition count."""
+    return docs.select(
         F.col("doc_id").alias("media_id"),
         F.lit("image").alias("kind"),
         F.encode("text", "utf-8").alias("payload"),

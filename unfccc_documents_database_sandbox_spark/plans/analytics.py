@@ -32,23 +32,6 @@ from unfccc_documents_database_sandbox_spark.catalog import load_table, pin
 from unfccc_documents_database_sandbox_spark.plans.windows import _ntz_micros
 from unfccc_documents_database_sandbox_spark.registry import register
 
-# persist-generation lifecycle (plans/graph.py:23 pattern and contract):
-# the basket builders reference their cached items/edges several times;
-# unpersisted, each reference re-runs the scan->distinct->window chain.
-# Each call evicts the previous call's cache; consume a build() result
-# before building the next basket plan (interleaved builds stay correct,
-# they only lose reuse). Deliberately a PER-MODULE generation, not shared
-# with plans/graph.py or operators/dedup.py: a shared list would let a
-# triangles build evict a concurrently-lazy minhash pipeline's caches —
-# module scope is the isolation, at the cost of three small copies of the
-# same two-line lifecycle.
-_PERSISTED: list = []
-
-
-def _evict_generation() -> None:
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-
 # --- shared CTE: events with exact integer value (cents) and props.k ------
 
 _EVENTS_CENTS = """
@@ -450,7 +433,6 @@ def _basket_pair_counts(spark, sf_dir):
     distinct->window chain before the cache filled; warm A/B median of
     7: basket_pairs 2.88 s with 4.1 s spikes -> 2.63 s flat) — and the
     support>=2 co-occurrence counts."""
-    _evict_generation()
     li = _basket_items(spark, sf_dir).transform(pin)
     a = li.alias("a")
     b = li.alias("b")

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from unfccc_documents_database_sandbox_spark.catalog import load_table, pin
+from unfccc_documents_database_sandbox_spark.catalog import hold, load_table
 from unfccc_documents_database_sandbox_spark.operators import dedup as D
 from unfccc_documents_database_sandbox_spark.registry import register
 
@@ -743,10 +743,9 @@ def join_similarity_prefix(spark, sf_dir):
     # candidate self-join through it, and the two bitmap attaches); pt
     # feeds both self-join sides. Unpersisted, the tokenize→dfreq→rank→
     # collect chain re-runs per consumer (measured 50 s vs ~6 s at
-    # sf0.1). arr stays a generation-evicted persist (filled eagerly by
-    # the n_vocab action below); the downstream bm/pt slices are lazy
-    # persists again as of r18 (see the pressure A/B note below).
-    D._evict_generation()
+    # sf0.1). arr is a held persist (filled eagerly by the n_vocab action
+    # below); the downstream bm/pt slices are lazy held persists too (see
+    # the pressure A/B note below).
     # EXACT BITMAP VERIFY (r06): the verify stage dominated the key's wall
     # time (32 s cold of a 37 s build at sf0.1) because it attached the two
     # full sorted-tid arrays (~1.4 KB each) to every one of 4.5M candidate
@@ -760,8 +759,7 @@ def join_similarity_prefix(spark, sf_dir):
     # vocabulary outgrows a useful bitmap (real open-vocab corpora), flip
     # back to the sorted-array intersect: the cutover constant is the
     # attach width, ceil(|V|/64)*8 bytes vs avg_doc_tokens*8 bytes.
-    arr = arr.persist()
-    D._PERSISTED_TOKENS.append(arr)
+    arr = hold(arr)
     # |V| = max dense id, read from the PERSISTED arr (one 0.5 s action) —
     # counting the vocab table itself would re-run the whole tokenize →
     # dfreq chain, which is exactly the recompute the persist avoids
@@ -772,7 +770,7 @@ def join_similarity_prefix(spark, sf_dir):
         aggregate(filter(toks, t -> (t - 1) DIV 64 = w), 0L,
                   (acc, t) -> acc | shiftleft(1L, CAST((t - 1) % 64 AS INT))))"""
     )
-    # r18: bm and pt are back to LAZY generation-evicted persists. The
+    # r18: bm and pt are back to LAZY held persists. The
     # r17 eager localCheckpoints fixed a cache-fill race, but the driver
     # measured the key 3.65 -> 4.52 s, and the pressure A/B (cold_ab.py:
     # fresh JVM, heavy checkpoint-y filler keys between passes — the
@@ -785,8 +783,7 @@ def join_similarity_prefix(spark, sf_dir):
     # read arr's already-filled cache, so the re-run window is small.
     # The cand persist stays dropped (r17): the pair set has exactly one
     # consumer (the x-then-y attach chain).
-    bm = arr.select("doc_id", "n", bitmap.alias("bm")).persist()
-    D._PERSISTED_TOKENS.append(bm)
+    bm = hold(arr.select("doc_id", "n", bitmap.alias("bm")))
     pre = arr.select(
         "doc_id",
         "n",
@@ -794,8 +791,7 @@ def join_similarity_prefix(spark, sf_dir):
             "toks", 1, (F.col("n") - F.expr("(n + 1) DIV 2") + 1).cast("int")
         ).alias("prefix"),
     )
-    pt = pre.select("doc_id", "n", F.explode("prefix").alias("p")).persist()
-    D._PERSISTED_TOKENS.append(pt)
+    pt = hold(pre.select("doc_id", "n", F.explode("prefix").alias("p")))
     cand = (
         pt.alias("a")
         .join(
@@ -968,9 +964,7 @@ def dedup_containment(spark, sf_dir):
             F.count(F.lit(1)).alias("n"),
         )
     )
-    D._evict_generation()
-    arr = arr.persist()
-    D._PERSISTED_TOKENS.append(arr)
+    arr = hold(arr)
     n_vocab = arr.agg(F.max(F.array_max("toks"))).collect()[0][0] or 1
     n_words = (n_vocab + 63) // 64
     bitmap = F.expr(
@@ -978,13 +972,12 @@ def dedup_containment(spark, sf_dir):
         aggregate(filter(toks, t -> (t - 1) DIV 64 = w), 0L,
                   (acc, t) -> acc | shiftleft(1L, CAST((t - 1) % 64 AS INT))))"""
     )
-    # r18: back to a lazy generation-evicted persist — the r17 eager
+    # r18: back to a lazy held persist — the r17 eager
     # localCheckpoint regressed the key in the driver's bench (2.94 ->
     # 4.92 s) and the pressure A/B measured the two shapes tied on
     # median (4.44 vs 4.46 s) with the eager pin swinging worse
     # (max 6.24 vs 4.94 s); see join_similarity_prefix's note.
-    bm = arr.select("doc_id", "n", bitmap.alias("bm")).persist()
-    D._PERSISTED_TOKENS.append(bm)
+    bm = hold(arr.select("doc_id", "n", bitmap.alias("bm")))
     # probe prefix: |A| - ceil(0.9|A|) + 1 rarest tokens of each doc
     probe = arr.select(
         "doc_id",

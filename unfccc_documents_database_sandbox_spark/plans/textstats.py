@@ -1795,15 +1795,6 @@ def text_normalize_nfc(spark, sf_dir):
 # everything. sqrt never touches FP: isqrt is FLOOR(SQRT(double))
 # corrected by +-1 integer checks, exact in both engines. ---
 
-_ISQRT = ("CAST(FLOOR(SQRT(CAST({x} AS DOUBLE))) AS BIGINT)")
-
-
-def _isqrt_sql(x: str) -> str:
-    s0 = _ISQRT.format(x=x)
-    return (f"(CASE WHEN ({s0}) * ({s0}) > ({x}) THEN ({s0}) - 1 "
-            f"WHEN (({s0}) + 1) * (({s0}) + 1) <= ({x}) THEN ({s0}) + 1 "
-            f"ELSE ({s0}) END)")
-
 
 def _isqrt_col(x):
     s0 = F.floor(F.sqrt(x.cast("double"))).cast("long")

@@ -25,6 +25,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from unfccc_documents_database_sandbox_spark.catalog import release
+
 Builder = Callable[[SparkSession, str], DataFrame]
 
 
@@ -318,14 +320,25 @@ def register(
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
 ) -> Callable[[Builder], Builder]:
-    """Decorator: register a query builder (and its oracle twin) by name."""
+    """Decorator: register a query builder (and its oracle twin) by name.
+
+    Lifecycle invariant: the registered ``build`` first calls
+    ``catalog.release()``, so what one registry build holds (``catalog.hold``)
+    lives until the next registry build starts. The decorator returns the
+    raw builder, so a builder that calls another builder does not release
+    its own holds partway through its build."""
 
     def deco(fn: Builder) -> Builder:
         key = public_name(name)
         if key in REGISTRY:
             raise ValueError(f"duplicate query name {key!r}")
+
+        def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+            release()
+            return fn(spark, sf_dir)
+
         REGISTRY[key] = QuerySpec(
-            name=key, build=fn, oracle=oracle, doc=(fn.__doc__ or "").strip(), tags=tags
+            name=key, build=build, oracle=oracle, doc=(fn.__doc__ or "").strip(), tags=tags
         )
         return fn
 

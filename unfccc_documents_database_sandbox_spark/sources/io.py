@@ -1,28 +1,16 @@
-"""Sources & sinks (S1, S2, S4, S5, S6).
+"""Sources & sinks (S2, S4, S5; the S1 parquet scan is catalog.load_table).
 
 Reference parity map (SURVEY.md §2.1):
-- S1 parquet scan        ← ORM full-table select
 - S2 JDBC/Postgres       ← psycopg2/SQLAlchemy engine (requirements.txt:49,65)
 - S4 CSV sink            ← df.to_csv (generate_decisions_summaries.py:120)
 - S5 DOCX/binary ingest  ← abstract-docx pipeline (requirements.txt:1)
-- S6 local rows → table  ← pd.DataFrame(results) (generate_decisions_summaries.py:119)
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
-
-
-def read_parquet(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
-    """S1: schema-enforced columnar scan; filters/projections push down."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
 
 
 def read_jdbc(
@@ -66,12 +54,6 @@ def write_parquet(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def from_rows(spark: SparkSession, rows: Sequence, schema: StructType | str) -> DataFrame:
-    """S6 local collection → table (reference: pd.DataFrame(list-of-dicts),
-    generate_decisions_summaries.py:111-119)."""
-    return spark.createDataFrame(rows, schema)
 
 
 def read_binary_docs(spark: SparkSession, path_glob: str) -> DataFrame:
