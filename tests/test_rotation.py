@@ -1,5 +1,5 @@
 """Rotation hygiene: the driver's correctness sweep checks only the FIRST 50
-registry keys in alphabetical order (registry.py:42-66), so rounds rotate
+registry keys in alphabetical order (see registry.py), so rounds rotate
 already-evidenced keys behind sort prefixes — since round 6 an explicit
 evidence-age queue of three tiers (``z_`` = DUE/oldest evidence, ``zz_`` =
 NEXT, ``zzz_`` = PARKED/just-evidenced; "_" < "z" makes the tiers sort in

@@ -27,8 +27,6 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Session-scoped memo of analyzed DataFrames keyed by (session, sf_dir,
 # table). spark.read.parquet() lists files and reads footers eagerly on the
 # driver; with ~70 registered queries each touching 1-10 tables that fixed

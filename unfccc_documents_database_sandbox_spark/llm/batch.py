@@ -1,4 +1,4 @@
-"""Batch LLM inference as a mapInPandas stage (U1-U4).
+"""LLM inference as a mapInPandas stage (U1-U4).
 
 Reference behavior (generate_decisions_summaries.py:91-109):
   prompt template → agent.batch(messages) → pydantic structured output →
@@ -7,17 +7,18 @@ Reference behavior (generate_decisions_summaries.py:91-109):
 Spark-native re-expression:
 - prompt templating is a JVM-side concat column (U2) — no Python.
 - inference is ``mapInPandas``: Arrow delivers columnar batches to Python;
-  each batch becomes ONE model.complete_batch call (the reference's
-  LangChain .batch). Parallelism = partitions × in-batch concurrency; at
-  cluster scale each executor fans out its own API calls, so throughput
-  scales horizontally instead of being capped by one client process.
+  each batch fans out one ``model.complete_one(prompt)`` call per row
+  through a bounded thread pool (the reference's LangChain .batch fan-out).
+  Parallelism = partitions × in-batch concurrency; at cluster scale each
+  executor fans out its own API calls, so throughput scales horizontally
+  instead of being capped by one client process.
 - structured output is validated relationally downstream via from_json
   (U3); a malformed response yields a NULL struct, not an exception.
 - cost is an output column → global SUM (U4); no driver-side accumulator.
 
-Retries: transient model errors are retried per batch with exponential
-backoff (the reference pins tenacity for the same purpose,
-requirements.txt:66).
+Retries: transient model errors are retried per prompt with exponential
+backoff inside ``summarize_isolated``, the one inference loop (the
+reference pins tenacity for the same purpose, requirements.txt:66).
 """
 
 from __future__ import annotations
@@ -53,59 +54,26 @@ def summarize(
     base_delay: float = 0.1,
     max_delay: float = 30.0,
 ) -> DataFrame:
-    """Run batch inference; returns (id, response_json, cost).
+    """Run inference and fail loudly; returns (id, response_json, cost).
 
-    One model instance per Python worker (created lazily inside the task),
-    one complete_batch call per Arrow batch.
-
-    Retry policy (VERDICT r10 #7 — the reference pins tenacity for this,
-    requirements.txt:66): per-batch, bounded at ``max_retries`` attempts,
-    DETERMINISTIC backoff ``min(base_delay * 2^attempt, max_delay)`` — no
-    jitter, so test schedules and production traces replay identically.
-    A RATE-LIMITED failure that carries a server hint (an exception with
-    a ``retry_after`` attribute — HttpChatModel attaches the 429
-    Retry-After header) sleeps the hint instead of the backoff curve,
-    capped at ``max_delay``: the server knows its own window better than
-    any client curve. Retries are whole-batch and results are consumed
-    only from the single successful attempt, so rows can neither
-    duplicate nor drop and the cost column bills retried calls ONCE
-    (pinned by tests/test_llm.py fail-then-succeed stubs)."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("response_json", T.StringType()),
-            T.StructField("cost", T.DoubleType()),
-        ]
-    )
-
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = model_factory()
-        for pdf in batches:
-            prompts = pdf[prompt_col].tolist()
-            for attempt in range(max_retries):
-                try:
-                    results = model.complete_batch(prompts)
-                    break
-                except Exception as exc:
-                    if attempt == max_retries - 1:
-                        raise
-                    hint = getattr(exc, "retry_after", None)
-                    delay = (float(hint) if hint is not None
-                             else base_delay * 2.0**attempt)
-                    time.sleep(min(delay, max_delay))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].astype("int64"),
-                    "response_json": [r["response_json"] for r in results],
-                    "cost": [r["cost"] for r in results],
-                }
+    ``summarize_isolated`` (same per-prompt pool and retry policy) plus
+    an in-plan check: reading a row whose prompt exhausted its retries
+    raises that row's typed error (``raise_error``, e.g. "HTTPError:
+    HTTP Error 500: ..."), so a pipeline never sees partial results.
+    The check is a filter, not a column, so column pruning and
+    ``count()`` keep it, and it adds no job."""
+    return (
+        summarize_isolated(
+            df, id_col, prompt_col, model_factory,
+            max_retries, base_delay, max_delay,
+        )
+        .filter(
+            F.when(F.col("error").isNull(), True).otherwise(
+                F.raise_error(F.col("error"))
             )
-
-    from unfccc_documents_database_sandbox_spark.catalog import spread
-
-    # spread before the Python stage: inference parallelism = partitions,
-    # and a row-group-bound scan would pin the whole batch to one worker.
-    return spread(df.select(id_col, prompt_col)).mapInPandas(infer, out_schema)
+        )
+        .drop("error")
+    )
 
 
 def parse_structured(df: DataFrame, json_col: str = "response_json") -> DataFrame:
@@ -126,10 +94,10 @@ def summarize_isolated(
     max_delay: float = 30.0,
     max_concurrency: int = 8,
 ) -> DataFrame:
-    """Per-prompt failure isolation (VERDICT r12 #5): like ``summarize``
-    but one POISON prompt dead-letters instead of failing its whole
-    Arrow batch three times. Returns (id, response_json, cost, error):
-    successes carry error=NULL; a prompt whose retries exhaust carries
+    """The inference stage, with per-prompt failure isolation (VERDICT
+    r12 #5): one POISON prompt dead-letters instead of failing its Arrow
+    batch. Returns (id, response_json, cost, error): successes carry
+    error=NULL; a prompt whose retries exhaust carries
     response_json=NULL, cost=0.0 and a typed ``error`` string
     ("ExcType: message") — relational dead-lettering, the same
     NULL-not-exception discipline parse_structured applies downstream.
@@ -137,18 +105,24 @@ def summarize_isolated(
     Shape: the reference's LangChain ``.batch()`` fans out per-document
     calls (generate_decisions_summaries.py:107); here each Arrow batch
     fans out through a bounded thread pool (``max_concurrency`` in-flight
-    calls per worker — total in-flight = partitions × max_concurrency,
-    the knob that matters against a rate-limited endpoint at 100 TB).
-    Retry policy is per PROMPT, not per batch: same deterministic
-    exponential backoff and Retry-After override as ``summarize``, so a
-    transient error re-sends one prompt, never its batch-mates — each
-    successful call is billed exactly once (cost never accumulates
-    across retries), and a permanently failing prompt costs its retries
-    but poisons nothing else.
+    ``model.complete_one`` calls per worker — total in-flight =
+    partitions × max_concurrency, the knob that matters against a
+    rate-limited endpoint at 100 TB). One model instance per Python
+    worker, created lazily inside the task.
 
-    Models may expose ``complete_one(prompt)``; otherwise the stage
-    falls back to ``complete_batch([prompt])[0]`` (every model that
-    speaks the batch contract works unchanged)."""
+    Retry policy (VERDICT r10 #7 — the reference pins tenacity for this,
+    requirements.txt:66): per PROMPT, bounded at ``max_retries``
+    attempts, DETERMINISTIC backoff ``min(base_delay * 2^attempt,
+    max_delay)`` — no jitter, so test schedules and production traces
+    replay identically. A RATE-LIMITED failure that carries a server
+    hint (an exception with a ``retry_after`` attribute —
+    ``OpenAIChatModel`` attaches the 429 Retry-After header) sleeps the
+    hint instead of the backoff curve, capped at ``max_delay``. A
+    transient error re-sends one prompt, never its batch-mates, and the
+    result is taken from the one successful attempt, so rows neither
+    duplicate nor drop and each successful call is billed exactly once;
+    a permanently failing prompt costs its retries but poisons nothing
+    else."""
     from concurrent.futures import ThreadPoolExecutor
 
     out_schema = T.StructType(
@@ -162,15 +136,11 @@ def summarize_isolated(
 
     def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = model_factory()
-        one = getattr(
-            model, "complete_one",
-            lambda p: model.complete_batch([p])[0],
-        )
 
         def call(prompt: str) -> tuple[str | None, float, str | None]:
             for attempt in range(max_retries):
                 try:
-                    r = one(prompt)
+                    r = model.complete_one(prompt)
                     return r["response_json"], r["cost"], None
                 except Exception as exc:
                     if attempt == max_retries - 1:
@@ -195,6 +165,8 @@ def summarize_isolated(
 
     from unfccc_documents_database_sandbox_spark.catalog import spread
 
+    # spread before the Python stage: inference parallelism = partitions,
+    # and a row-group-bound scan would pin the whole batch to one worker.
     return spread(df.select(id_col, prompt_col)).mapInPandas(infer, out_schema)
 
 

@@ -1,29 +1,31 @@
-"""OpenAI-compatible chat-completions adapter (VERDICT r15 #3).
+"""OpenAI-compatible chat-completions adapter (VERDICT r15 #3) — the
+engine's one HTTP transport.
 
 The reference binds ``ChatOpenAI`` over the REAL chat-completions wire
 format (generate_decisions_summaries.py:95, requirements.txt:29-34):
 ``{"model", "messages": [{role, content}]}`` requests and
 ``choices[0].message.content`` + ``usage.prompt_tokens /
-completion_tokens`` responses. ``HttpChatModel``'s bespoke
-``{"prompts"} → {"results"}`` schema can't talk to an actual
-OpenAI-compatible endpoint (vLLM, llama.cpp server, an API gateway) —
-this module closes that gap while keeping the engine's batch contract:
+completion_tokens`` responses — what an actual OpenAI-compatible
+endpoint (vLLM, llama.cpp server, an API gateway) serves:
 
 - ``chat_payload`` / ``parse_chat_completion`` are PURE functions of the
   request/response bodies, shared by the live client and the
   deterministic stub so the parse + usage→cost arithmetic is exercised
   (and DuckDB-oracle-checked) without a network.
-- ``OpenAIChatModel`` implements ``complete_batch`` by fanning one POST
-  per prompt (the protocol is one conversation per request — LangChain's
-  ``.batch`` does exactly this fan-out client-side). Transport failures
-  propagate; the stage-level retry in ``llm.batch.summarize`` owns
-  recovery (ONE retry policy), and a 429's ``Retry-After`` header is
-  surfaced as ``exc.retry_after`` exactly like ``HttpChatModel``.
+- ``OpenAIChatModel.complete_one`` sends one POST per prompt (the
+  protocol is one conversation per request; the stage fans prompts out
+  through its thread pool, as LangChain's ``.batch`` does client-side).
+  Transport failures propagate; the per-prompt retry in
+  ``llm.batch.summarize_isolated`` owns recovery (ONE retry policy), and
+  a 429's ``Retry-After`` header is surfaced as ``exc.retry_after``.
 - ``StubOpenAIEndpoint`` builds the FULL wire-format response body
   deterministically (content = the stub summary JSON, usage = the
   chars/4 token heuristic) and feeds it through the SAME
   ``parse_chat_completion`` — so the registered query's hash-green
   oracle covers the adapter's parsing and cost mapping end-to-end.
+
+Stdlib-only imports: the benchmark's mock endpoint (perfbench/endpoint.py)
+loads this file by path for ``stub_wire_response``.
 
 Instances are created inside the Python worker (``model_factory``
 closure), so each executor fans out its own connections — throughput
@@ -38,7 +40,6 @@ import json
 import math
 import urllib.error
 import urllib.request
-from collections.abc import Sequence
 
 # Default per-token prices (USD). Chosen so the micro-USD cost of the
 # deterministic stub is integral: cost_micros = prompt_tokens +
@@ -63,7 +64,7 @@ def parse_chat_completion(
     usd_per_prompt_token: float = USD_PER_PROMPT_TOKEN,
     usd_per_completion_token: float = USD_PER_COMPLETION_TOKEN,
 ) -> dict:
-    """chat-completions response → the engine's batch-result row:
+    """chat-completions response → the engine's per-prompt result row:
     ``choices[0].message.content`` becomes ``response_json`` and the
     ``usage`` token counts price into ``cost`` (the reference's
     get_openai_callback accounting, generate_decisions_summaries.py:
@@ -101,12 +102,10 @@ def _attach_retry_after(exc: urllib.error.HTTPError) -> None:
 
 
 class OpenAIChatModel:
-    """``complete_batch`` against a real OpenAI-compatible endpoint
+    """``complete_one`` against a real OpenAI-compatible endpoint
     (``.../v1/chat/completions``): one POST per prompt, wire-format
     request/response, usage-priced cost. Deliberately retry-free — the
-    per-batch retry in ``llm.batch.summarize`` owns recovery, so a
-    mid-batch failure retries the whole batch (results are consumed
-    only from the single successful attempt; see that docstring)."""
+    per-prompt retry in ``llm.batch.summarize_isolated`` owns recovery."""
 
     def __init__(self, endpoint: str, model: str = "stub-model",
                  timeout: float = 10.0, api_key: str | None = None,
@@ -119,7 +118,7 @@ class OpenAIChatModel:
         self.usd_per_prompt_token = usd_per_prompt_token
         self.usd_per_completion_token = usd_per_completion_token
 
-    def _complete_one(self, prompt: str) -> dict:
+    def complete_one(self, prompt: str) -> dict:
         headers = {"Content-Type": "application/json"}
         if self.api_key:
             headers["Authorization"] = f"Bearer {self.api_key}"
@@ -137,8 +136,9 @@ class OpenAIChatModel:
         return parse_chat_completion(
             body, self.usd_per_prompt_token, self.usd_per_completion_token)
 
-    def complete_batch(self, prompts: Sequence[str]) -> list[dict]:
-        return [self._complete_one(p) for p in prompts]
+    # perfbench/tests/test_endpoint.py calls the old private name, and the
+    # benchmark's files change only with the benchmark itself
+    _complete_one = complete_one
 
 
 def stub_wire_response(model: str, prompt: str) -> dict:
@@ -183,8 +183,5 @@ class StubOpenAIEndpoint:
     def __init__(self, model: str = "stub-model"):
         self.model = model
 
-    def complete_batch(self, prompts: Sequence[str]) -> list[dict]:
-        return [
-            parse_chat_completion(stub_wire_response(self.model, p))
-            for p in prompts
-        ]
+    def complete_one(self, prompt: str) -> dict:
+        return parse_chat_completion(stub_wire_response(self.model, prompt))

@@ -8,74 +8,30 @@ stub (SURVEY.md §5.4): the summary is a content hash of the prompt and the
 cost is a pure function of prompt length — every downstream operator
 (structured-output parse, cost aggregation) stays exactly value-checkable.
 
-A live model implements the same ``complete_batch`` contract; swap via the
-``model_factory`` argument of ``llm.batch.summarize``.
+A live model implements the same ``complete_one(prompt) -> dict``
+contract (``OpenAIChatModel``); swap via the ``model_factory`` argument
+of the ``llm.batch`` stages.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-from collections.abc import Sequence
 
 COST_PER_CHAR = 1e-6  # mirrors the reference's per-call cost accounting (U4)
 
 
 class StubChatModel:
-    """Batch-complete with deterministic structured-output JSON responses."""
+    """Deterministic structured-output JSON response per prompt."""
 
-    def complete_batch(self, prompts: Sequence[str]) -> list[dict]:
-        out = []
-        for p in prompts:
-            digest = hashlib.sha256(p.encode("utf-8")).hexdigest()
-            out.append(
-                {
-                    # structured output: JSON matching the reference's
-                    # DecisionSummaryAgentResponse {summary: str} schema
-                    "response_json": json.dumps({"summary": f"STUB:{digest}"}),
-                    "cost": COST_PER_CHAR * len(p),
-                }
-            )
-        return out
-
-
-class FlakyStubModel(StubChatModel):
-    """Fault-injecting stub (VERDICT r10 #7): raises ``failures``-many
-    transient errors per distinct batch, then answers like StubChatModel.
-    The attempt ledger is a spool DIRECTORY of O_EXCL-created marker
-    files keyed by batch-content hash — it works across Python worker
-    processes on one host (the retry tests' seam; a real cluster test
-    would use the HTTP flaky server in tests/test_llm.py instead), and
-    it makes the failure schedule deterministic per batch regardless of
-    which worker runs which attempt. ``retry_after`` optionally attaches
-    a rate-limit hint to the raised error, exercising the server-window
-    path of ``llm.batch.summarize``'s retry loop."""
-
-    def __init__(self, spool_dir: str, failures: int = 2,
-                 retry_after: float | None = None):
-        self.spool_dir = spool_dir
-        self.failures = failures
-        self.retry_after = retry_after
-
-    def complete_batch(self, prompts: Sequence[str]) -> list[dict]:
-        import os
-
-        key = hashlib.sha256("\x00".join(prompts).encode()).hexdigest()[:32]
-        attempt = 0
-        while True:
-            try:
-                os.close(os.open(
-                    os.path.join(self.spool_dir, f"{key}.{attempt}"),
-                    os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-                break
-            except FileExistsError:
-                attempt += 1
-        if attempt < self.failures:
-            exc = RuntimeError(f"transient failure #{attempt + 1}")
-            if self.retry_after is not None:
-                exc.retry_after = self.retry_after
-            raise exc
-        return super().complete_batch(prompts)
+    def complete_one(self, prompt: str) -> dict:
+        digest = hashlib.sha256(prompt.encode("utf-8")).hexdigest()
+        return {
+            # structured output: JSON matching the reference's
+            # DecisionSummaryAgentResponse {summary: str} schema
+            "response_json": json.dumps({"summary": f"STUB:{digest}"}),
+            "cost": COST_PER_CHAR * len(prompt),
+        }
 
 
 class PoisonStubModel(StubChatModel):
@@ -91,18 +47,22 @@ class PoisonStubModel(StubChatModel):
     def complete_one(self, prompt: str) -> dict:
         if len(prompt) % self.poison_mod == 0:
             raise ValueError("poison prompt")
-        return self.complete_batch([prompt])[0]
+        return super().complete_one(prompt)
 
 
 class IsolationFaultModel(StubChatModel):
     """Fault-injection seam for the per-prompt isolation tests: records
     every attempt in a spool directory (O_EXCL marker files keyed by
-    prompt hash — works across worker processes, the FlakyStubModel
-    pattern), permanently fails prompts containing ``poison_marker``,
-    transiently fails prompts containing ``transient_marker`` for their
-    first ``transient_failures`` attempts, and answers everything else
-    first try. Lives in library code because test-module classes can't
-    unpickle inside Spark workers (r11 lesson)."""
+    prompt hash — works across worker processes on one host and makes
+    the schedule deterministic per prompt regardless of which worker
+    runs which attempt), permanently fails prompts containing
+    ``poison_marker``, transiently fails prompts containing
+    ``transient_marker`` for their first ``transient_failures``
+    attempts, and answers everything else first try.
+    ``transient_marker="Summarize"`` fails EVERY ``prompt_column``
+    prompt N times (each starts with ``SYSTEM_PROMPT``). Lives in
+    library code because test-module classes can't unpickle inside
+    Spark workers (r11 lesson)."""
 
     def __init__(self, spool_dir: str, poison_marker: str = "POISON",
                  transient_marker: str = "FLAKY",
@@ -129,7 +89,7 @@ class IsolationFaultModel(StubChatModel):
             raise ValueError("poison prompt")
         if self.transient_marker in prompt and attempt < self.transient_failures:
             raise RuntimeError(f"transient failure #{attempt + 1}")
-        return self.complete_batch([prompt])[0]
+        return super().complete_one(prompt)
 
 
 class MalformedStubModel(StubChatModel):
@@ -168,4 +128,4 @@ class MalformedStubModel(StubChatModel):
                 "response_json": "sorry, here is your summary: ...",
                 "cost": COST_PER_CHAR * len(prompt),
             }
-        return self.complete_batch([prompt])[0]
+        return super().complete_one(prompt)

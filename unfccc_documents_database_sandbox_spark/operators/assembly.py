@@ -52,15 +52,6 @@ blocks AS (
 )
 """
 
-FRAGMENT_SQL = """
-CASE WHEN seq % 11 = 0 THEN ''
-     WHEN seq % 7  = 0 THEN '[T] ' || word || chr(10)
-     WHEN seq % 3  = 0 THEN CAST(seq AS VARCHAR) || '.' || chr(9) || word || chr(10)
-     ELSE word || chr(10)
-END
-"""
-
-
 def blocks_from_documents(docs: DataFrame) -> DataFrame:
     """documents(doc_id, text, ...) -> blocks(doc_id, seq BIGINT 1-based, word).
 

@@ -105,8 +105,8 @@ def udf_llm_dead_letter(spark, sf_dir):
     prompt' — while their Arrow batch-mates summarize normally and are
     billed exactly once; the reference's LangChain .batch() fans out
     per-document calls the same way (generate_decisions_summaries.py:107),
-    where the whole-batch `summarize` stage would have failed all ~500
-    rows of each poisoned batch 3x. Retry/backoff and bounded
+    where a whole-batch retry would have failed all ~500 rows of each
+    poisoned batch 3x. Retry/backoff and bounded
     in-partition concurrency are exercised separately in
     tests/test_llm.py (fault-injection: 1 poison of 100 yields 99
     summaries + 1 failure row)."""

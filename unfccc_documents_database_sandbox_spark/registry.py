@@ -54,97 +54,20 @@ REGISTRY: dict[str, QuerySpec] = {}
 #   zz_  = NEXT      middle-aged evidence; receives the window spillover
 #   zzz_ = PARKED    evidenced in the latest round; sorts last
 #
-# Each round the freshly evidenced cohort moves to PARKED, the old DUE tier
-# (just re-evidenced) also moves to PARKED, and the oldest PARKED/NEXT keys
-# are promoted into DUE sized to fill the window. Nothing else changes: the
-# builder, the oracle, and the plan are identical — only the registry sort
-# position moves, and prior rounds' green rows remain on file under the
-# rotated spellings (see README "Driver-window rotation"; invariants are
-# machine-checked by tests/test_rotation.py).
-#
-# History: r02 introduced single-tier z_ rotation (VERDICT r02 #2); r05
-# un-rotated sort_global / sql_corr_subquery for re-evidence (VERDICT r04
-# #3); r06 introduced the tiers above (VERDICT r05 #2) because a single z_
-# tier kept handing the window back to the cohort checked the round before
-# while r02-era evidence aged; r07 advanced the queue per VERDICT r06 #2
-# (r03 cohort promoted; the 50 r06-evidenced keys parked); r08 advanced it
-# per VERDICT r07 #2 (r04 cohort + alphabetically-first r05 keys promoted,
-# DUE sized mid-round to 34 = 50 - 16 new keys); r09 advances it per
-# VERDICT r08 #1: the full 27-key r05 tail + the alphabetically-first r06
-# keys promoted to DUE (sized mid-round as round-9 keys register — each
-# new unprefixed key demotes the alphabetically-LAST promoted r06 key back
-# to NEXT), the 50 r08-evidenced keys (16 unprefixed + 34 z_ re-checks)
-# parked, the r07 PARKED cohort aged into NEXT; r10 advances it per
-# VERDICT r09 #1: the 50-key r09 window (22 unprefixed + 27 r05-tail
-# re-checks + agg_corr_exact) parked, the r08 PARKED cohort aged into
-# NEXT, and the alphabetically-first keys of the r06-evidence pool
-# promoted to DUE (sized for the planned r10 new-key count; undersizing
-# is safe — window spillover lands on the alphabetically-first zz_ keys,
-# which ARE the remaining r06 cohort); r11 advances it per VERDICT r10
-# #1: the 50-key r10 window (18 unprefixed + 32 z_ re-checks) parked, the
-# r09 PARKED cohort aged into NEXT, and the full 17-key r06 tail plus the
-# alphabetically-first 25 keys of the r07 cohort promoted to DUE (sized
-# 42 for the planned r11 new-key count; undersizing is safe — window
-# spillover lands on the alphabetically-first zz_ keys, which ARE the
-# remaining r07 cohort); r12 advances it per VERDICT r11 #1: the 50-key
-# r11 window (10 unprefixed + 40 z_ re-checks) parked, the r10 PARKED
-# cohort aged into NEXT, and the full 27-key r07 tail plus the
-# alphabetically-first 13 keys of the r08 cohort promoted to DUE (sized
-# 40 for the planned r12 new-key count of 10); r13 advances it per
-# VERDICT r12 #1: the 50-key r12 window (14 unprefixed + 36 z_
-# re-checks) parked, the r11 PARKED cohort aged into NEXT, and the full
-# 41-key r08 tail promoted to DUE (sized 41 for the planned r13
-# new-key count of 9; undersizing is safe — window spillover lands on
-# the alphabetically-first zz_ keys, which ARE the oldest-evidence r09
-# cohort); r14 advances it per VERDICT r13 #1: the 50-key r13 window
-# (17 unprefixed + 33 z_ re-checks) parked, the r12 PARKED cohort aged
-# into NEXT, and the 8-key r08 remnant + the alphabetically-first 34
-# r09-cohort keys + the 2 r14-rebuilt near-dup keys promoted to DUE
-# (sized 44 for the planned r14 new-key count of 6, re-sized 37
-# mid-round as the count grew to 13 — the seven newest-evidence r09
-# DUE members demoted back to NEXT). Oldest evidence on file after
-# r14: r08 (the z_ remnant), then r09; r15 advances it per VERDICT r14
-# #1: the 50-key r14 window (13 unprefixed + 37 z_ re-checks) parked,
-# the r13 PARKED cohort aged into NEXT, and the full 23-key r09 cohort
-# + the alphabetically-first 13 r10-cohort keys + the 3 r15-rebuilt
-# keys (doc_rolling_hash re-oracled, multimodal_audio_energy /
-# multimodal_resize re-pinned over real codecs) promoted to DUE (sized
-# 39 for the planned r15 new-key count of 11). Oldest evidence on file
-# after r15: r10 (the tail), then r11. r16 advances it per VERDICT r15
-# #1: the 50-key r15 window (31 unprefixed + 19 z_ re-checks) parked,
-# the r14 PARKED cohort aged into NEXT, and the full 21-key r09
-# remnant (the mid-r15 DUE demotions — their r09 evidence is now the
-# oldest on file) + the alphabetically-first 19 keys of the r10 tail +
-# the 2 r16-rebuilt ANN-index keys promoted to DUE (sized 42 for the
-# planned r16 new-key count of 8). Oldest evidence on file after r16:
-# r10 (the remaining 16-key tail), then r11.
-
-# DUE (z_): oldest evidence on file — promoted per VERDICT r15 #1 /
-# the standing queue contract: the full 21-key r09 remnant (nothing
-# older remains — these were demoted from DUE mid-r15 to make window
-# room for the late r15 wave, so their latest clean driver row is
-# still CORRECTNESS_r09.json), the alphabetically-first 19 keys of
-# the r10 cohort tail (events_dau_wau .. lang_id), PLUS the 2 keys
-# whose r16 builder change stales their old evidence:
-# sim_index_persisted / sim_index_refresh rebuilt so the IVFADC
-# encodings live in a parquet side table instead of the driver-side
-# JSON artifact (VERDICT r15 "What's wrong" #1 / next-round #2) — the
-# X200 changed-builder re-evidence rule. Sized 42 = 50 − the 8
-# planned r16 new keys (sql_tpcds_q6/q32/q41/q92,
-# udf_llm_openai_adapter, text_quality_classifier_trained,
-# multimodal_image_phash, text_bpe_pretrained_2k; machine-checked by
-# tests/test_rotation.py::test_window_reaches_every_due_key; sized
-# from the registry, not this comment). Mid-round resize: the r16
-# second wave landed 5 MORE keys (sql_tpcds_q1/q23/q39/q97,
-# text_normalize_nfc), so the 5 alphabetically-last r10-cohort
-# promotees (join_range, join_semi, join_skew_salted, json_extract,
-# lang_id) demoted back to NEXT — the r07 precedent: each new
-# unprefixed key displaces the newest-evidence end of DUE, never the
-# oldest; the rebuilt ANN keys are protected (they NEED re-evidence).
-# Third-wave key corpus_mix_temperature demotes join_null_safe, the
-# then-newest-evidence DUE tail, by the same rule (DUE now 36).
-# Fourth-wave keys corpus_select_budget / curation_domain_filter
-# demote join_left_nullable / join_lateral likewise (DUE now 34).
+# Only the sort position moves: builder, oracle and plan are identical
+# under every spelling, and ``lookup`` resolves the bare name. Invariants,
+# machine-checked by tests/test_rotation.py:
+# - every rotated name is in exactly one tier and registered exactly once,
+#   under its tier's prefix;
+# - the tiers sort DUE < NEXT < PARKED;
+# - every unprefixed key and every DUE key sorts inside the 50-key window
+#   (so DUE is sized 50 minus the unprefixed keys, never more);
+# - every key named in tests/, bench.py or __spark_entry__.py resolves.
+# A round's rotation parks the keys its window evidenced, ages the old
+# PARKED tier into NEXT and promotes the oldest-evidence keys into DUE; a
+# new unprefixed key demotes the newest-evidence end of DUE back to NEXT,
+# never the oldest. The round-by-round history is in README's rotation
+# sections.
 ROTATED_DUE: frozenset[str] = frozenset(
     {
         "events_dau_wau", "events_rfm", "events_top_paths",
@@ -164,14 +87,10 @@ ROTATED_DUE: frozenset[str] = frozenset(
     }
 )
 
-# NEXT (zz_): latest clean driver row is CORRECTNESS_r10.json (the
-# 16-key r10 tail beyond the 19 promoted above), CORRECTNESS_r11.json,
-# CORRECTNESS_r12.json, CORRECTNESS_r13.json, or CORRECTNESS_r14.json
-# (the 50-key r14 window — aged out of PARKED this round). These
-# receive the r16 window spillover beyond the DUE tier and are the
-# r17 promotion pool (r10 tail first, then r11). Rows-only by design:
-# sim_topk_pq-family/sim_topk_ivf/sim_topk_ivfpq/sim_topk_lsh (each
-# with a hash-exact portable twin), agg_approx_* /
+# NEXT (zz_): latest clean correctness row is in CORRECTNESS_r10.json ..
+# CORRECTNESS_r14.json; the promotion pool for DUE, oldest first.
+# Rows-only by design: sim_topk_pq-family/sim_topk_ivf/sim_topk_ivfpq/
+# sim_topk_lsh (each with a hash-exact portable twin), agg_approx_* /
 # agg_hll_partitioned (approx sketches with exact twins),
 # stream_dedup_live (arrival-order by construction), catalog_tables
 # (no DuckDB twin by design).
@@ -261,13 +180,9 @@ ROTATED_NEXT: frozenset[str] = frozenset(
     }
 )
 
-# PARKED (zzz_): latest clean driver row is CORRECTNESS_r15.json — the
-# r15 window (48 hash-green + dedup_fuzzy_minhash / dedup_simhash
-# rows-only by design, xxhash64 hot paths with hash-green portable
-# twins): 31 were the un-prefixed r15 keys, 19 were z_-spelled
-# re-checks of the r09/r10-cohort block. sim_index_refresh is NOT here
-# despite its fresh r15 row — its r16 builder rebuild (parquet-side-
-# table encodings) promotes it straight to DUE per the X200 rule.
+# PARKED (zzz_): latest clean correctness row is CORRECTNESS_r15.json (48
+# hash-green; dedup_fuzzy_minhash / dedup_simhash are rows-only by design,
+# xxhash64 hot paths with hash-green portable twins).
 ROTATED_PARKED: frozenset[str] = frozenset(
     {
         "agg_decimal_money", "agg_mode_freq", "agg_skewness_exact",
@@ -291,11 +206,6 @@ ROTATED_PARKED: frozenset[str] = frozenset(
         "udf_llm_prompt_cache", "udf_llm_structured_retry"
     }
 )
-
-# Backwards-compatible aliases (README r05 wording; superseded by the
-# three-tier queue above — GREEN is "every rotated key", FRESH is PARKED).
-ROTATED_GREEN: frozenset[str] = ROTATED_DUE | ROTATED_NEXT | ROTATED_PARKED
-ROTATED_FRESH: frozenset[str] = ROTATED_PARKED
 
 _TIER_PREFIX: tuple[tuple[frozenset[str], str], ...] = (
     (ROTATED_DUE, "z_"),

@@ -44,10 +44,6 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-# change feed metadata columns appended after the table's own schema
-_META_COLS = ("_change_type", "_commit_version")
-
-
 # Log resolution delegates to the ref-aware snapshots helpers (pure
 # Python, no Spark session — safe on executors too), so the streaming
 # feed works on BRANCH roots (`branch_root(root, name)`) exactly like
