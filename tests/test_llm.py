@@ -26,12 +26,15 @@ from __future__ import annotations
 
 import contextlib
 import hashlib
+import inspect
 import json
 import math
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
+from pyspark.sql import functions as F
 
 from tests.conftest import SF_CORRECT
 from unfccc_documents_database_sandbox_spark.catalog import load_table
@@ -54,15 +57,32 @@ class _OpenAIWireHandler(BaseHTTPRequestHandler):
     with the statuses in ``failures`` (a 429 carries ``Retry-After:
     retry_after`` when that is set), then with the full deterministic
     wire-format body. Keyed by payload hash, so the schedule is
-    deterministic regardless of which worker connects when."""
+    deterministic regardless of which worker connects when. Each valid
+    request is held ``hold_s`` seconds and counted in flight meanwhile;
+    ``connections`` counts the TCP connections served. HTTP/1.0 (the
+    default) closes every connection after its response; under HTTP/1.1
+    it stays open unless ``drop_idle`` closes it without saying so, as
+    a server timing out an idle keep-alive connection does."""
 
     failures: tuple[int, ...] = ()
     retry_after: str | None = None
+    hold_s = 0.0
+    drop_idle = False
     attempts: dict[str, int] = {}
     bad_requests: list[str] = []
+    connections = 0
+    inflight = 0
+    inflight_max = 0
     lock = threading.Lock()
 
+    def handle(self):
+        with self.lock:
+            _OpenAIWireHandler.connections += 1
+        super().handle()
+
     def do_POST(self):  # noqa: N802 (http.server API)
+        if self.drop_idle:
+            self.close_connection = True  # and no "Connection: close"
         n = int(self.headers.get("Content-Length", "0"))
         payload = self.rfile.read(n)
         key = hashlib.sha256(payload).hexdigest()
@@ -76,16 +96,24 @@ class _OpenAIWireHandler(BaseHTTPRequestHandler):
             with self.lock:
                 self.bad_requests.append(json.dumps(body)[:200])
             self.send_response(400)
+            self.send_header("Content-Length", "0")
             self.end_headers()
             return
         with self.lock:
             seen = self.attempts.get(key, 0)
             self.attempts[key] = seen + 1
+            _OpenAIWireHandler.inflight += 1
+            _OpenAIWireHandler.inflight_max = max(
+                _OpenAIWireHandler.inflight_max, _OpenAIWireHandler.inflight)
+        time.sleep(self.hold_s)
+        with self.lock:
+            _OpenAIWireHandler.inflight -= 1
         if seen < len(self.failures):
             status = self.failures[seen]
             self.send_response(status)
             if status == 429 and self.retry_after is not None:
                 self.send_header("Retry-After", self.retry_after)
+            self.send_header("Content-Length", "0")
             self.end_headers()
             return
         resp = stub_wire_response(
@@ -101,22 +129,34 @@ class _OpenAIWireHandler(BaseHTTPRequestHandler):
         pass
 
 
+# the stage's default in-flight budget: its total concurrent requests
+_BUDGET = inspect.signature(
+    llm_batch.summarize_isolated).parameters["max_concurrency"].default
+
+
 class _WireServer(ThreadingHTTPServer):
-    # the stage opens up to partitions × max_concurrency connections at
+    # the stage opens up to its whole in-flight budget of connections at
     # once; the default listen backlog of 5 resets some of them, and a
     # reset burns a retry the attempt ledger never sees
-    request_queue_size = 128
+    request_queue_size = _BUDGET
 
 
 @contextlib.contextmanager
 def _wire_server(failures: tuple[int, ...] = (),
-                 retry_after: str | None = None):
-    """Serve ``_OpenAIWireHandler`` with the given failure schedule and a
-    fresh attempt ledger; yields the chat-completions URL."""
+                 retry_after: str | None = None, hold_s: float = 0.0,
+                 protocol: str = "HTTP/1.0", drop_idle: bool = False):
+    """Serve ``_OpenAIWireHandler`` with the given failure schedule and
+    fresh ledgers; yields the chat-completions URL."""
     _OpenAIWireHandler.failures = failures
     _OpenAIWireHandler.retry_after = retry_after
+    _OpenAIWireHandler.hold_s = hold_s
+    _OpenAIWireHandler.protocol_version = protocol
+    _OpenAIWireHandler.drop_idle = drop_idle
     _OpenAIWireHandler.attempts = {}
     _OpenAIWireHandler.bad_requests = []
+    _OpenAIWireHandler.connections = 0
+    _OpenAIWireHandler.inflight = 0
+    _OpenAIWireHandler.inflight_max = 0
     server = _WireServer(("127.0.0.1", 0), _OpenAIWireHandler)
     threading.Thread(target=server.serve_forever, daemon=True).start()
     try:
@@ -626,3 +666,116 @@ def test_chat_completion_parse_fails_loudly_on_foreign_schema():
     ):
         with pytest.raises(ValueError, match="not chat-completions shaped"):
             parse_chat_completion(bad)
+
+
+def _grouped_prompts(spark, n: int, prompt: F.Column | None = None):
+    """(doc_id, prompt) out of a groupBy, the shape ``assemble_doc_text``
+    hands the stage: AQE coalesces its shuffle at run time."""
+    g = spark.range(2 * n).groupBy((F.col("id") % n).alias("doc_id")).agg(
+        F.count("*").alias("c"))
+    if prompt is None:
+        prompt = F.concat(F.lit("prompt "), F.col("doc_id").cast("string"))
+    return g.select("doc_id", prompt.alias("prompt"))
+
+
+def test_stage_build_runs_no_job(spark, tmp_path):
+    """Building the stage starts no Spark job: it fixes its own
+    partitioning instead of asking the plan for its partition count,
+    which under AQE executes the upstream shuffle. The structured
+    stage's lazy pin lets AQE settle the upstream's shuffles at build,
+    but its build calls no model: that waits for the first action."""
+    import os
+
+    from unfccc_documents_database_sandbox_spark.llm.stub import (
+        IsolationFaultModel,
+    )
+
+    sc = spark.sparkContext
+    prompts = _grouped_prompts(spark, 50)
+    group = sc.getLocalProperty("spark.jobGroup.id")
+
+    def job_ids():
+        # job starts reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(group))
+
+    before = job_ids()
+    isolated = llm_batch.summarize_isolated(prompts)
+    assert job_ids() == before
+    assert isolated.count() == 50
+
+    spool = str(tmp_path / "spool")
+    os.makedirs(spool)
+    structured = llm_batch.summarize_structured(
+        prompts, model_factory=lambda: IsolationFaultModel(spool))
+    assert os.listdir(spool) == []
+    assert structured.count() == 50 and len(os.listdir(spool)) == 50
+
+
+def test_structured_pass_evaluates_its_upstream_once(spark):
+    """The re-prompt reads its prompts from the pinned first pass, so a
+    structured pass evaluates the prompt frame once per row: a counting
+    UDF on the prompt projection ends at the row count."""
+    from unfccc_documents_database_sandbox_spark.llm.stub import (
+        MalformedStubModel,
+    )
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def count(p):
+        evaluated.add(1)
+        return p
+
+    # prompt lengths 20-26: 22 answers invalid once, 23 always
+    prompts = _grouped_prompts(spark, 50, F.udf(count, "string")(
+        F.expr("repeat('p', 20 + doc_id % 7)")))
+    out = llm_batch.summarize_structured(
+        prompts,
+        model_factory=lambda: MalformedStubModel(once_mod=11, always_mod=23),
+        max_retries=2,
+        base_delay=0.01,
+    ).collect()
+    assert len(out) == 50
+    errors = [r.error for r in out if r.error is not None]
+    assert errors and all(e.startswith("StructuredOutputError") for e in errors)
+    assert any(r.summary == "STUB:" + hashlib.sha256(
+        ("p" * 22 + llm_batch.RETRY_SUFFIX).encode()).hexdigest() for r in out)
+    assert evaluated.value == 50
+
+
+def test_stage_in_flight_budget_is_stage_wide(spark):
+    """``max_concurrency`` caps the stage's TOTAL in-flight requests:
+    with every request held 0.2 s, a 200-prompt stage peaks above the
+    old per-partition cap (4 partitions × 8) and never above the
+    budget."""
+    docs = spark.range(200).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("prompt "), F.col("id").cast("string")).alias("prompt"),
+    ).repartition(4)
+    with _wire_server(hold_s=0.2) as url:
+        out = llm_batch.summarize_isolated(
+            docs, model_factory=lambda: OpenAIChatModel(url)).collect()
+        peak = _OpenAIWireHandler.inflight_max
+    assert len(out) == 200 and all(r.error is None for r in out)
+    assert 32 < peak <= _BUDGET
+
+
+def test_openai_client_keeps_its_connection_alive():
+    """Under HTTP/1.1 one thread's requests share one connection, error
+    replies included; a connection the server closed while idle is
+    replaced before the next request instead of failing it."""
+    prompts = [f"prompt {i}" for i in range(6)]
+    with _wire_server(failures=(429,), protocol="HTTP/1.1") as url:
+        model = OpenAIChatModel(url)
+        for p in prompts:
+            with pytest.raises(Exception, match="429"):
+                model.complete_one(p)
+            assert model.complete_one(p)["response_json"].startswith(
+                '{"summary"')
+        assert _OpenAIWireHandler.connections == 1
+    with _wire_server(protocol="HTTP/1.1", drop_idle=True) as url:
+        model = OpenAIChatModel(url)
+        for p in prompts:
+            model.complete_one(p)
+            time.sleep(0.1)  # let the server's close reach this side
+        assert _OpenAIWireHandler.connections == len(prompts)

@@ -9,9 +9,9 @@ Spark-native re-expression:
 - inference is ``mapInPandas``: Arrow delivers columnar batches to Python;
   each batch fans out one ``model.complete_one(prompt)`` call per row
   through a bounded thread pool (the reference's LangChain .batch fan-out).
-  Parallelism = partitions × in-batch concurrency; at cluster scale each
-  executor fans out its own API calls, so throughput scales horizontally
-  instead of being capped by one client process.
+  ``max_concurrency`` is the stage's total in-flight budget, split evenly
+  over the stage's own partitions, so the stage runs at the endpoint's
+  pace whatever partitioning the upstream plan arrives with.
 - structured output is validated relationally downstream via from_json
   (U3); a malformed response yields a NULL struct, not an exception.
 - cost is an output column → global SUM (U4); no driver-side accumulator.
@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
 
@@ -92,7 +93,7 @@ def summarize_isolated(
     max_retries: int = 3,
     base_delay: float = 0.1,
     max_delay: float = 30.0,
-    max_concurrency: int = 8,
+    max_concurrency: int = 128,
 ) -> DataFrame:
     """The inference stage, with per-prompt failure isolation (VERDICT
     r12 #5): one POISON prompt dead-letters instead of failing its Arrow
@@ -104,11 +105,22 @@ def summarize_isolated(
 
     Shape: the reference's LangChain ``.batch()`` fans out per-document
     calls (generate_decisions_summaries.py:107); here each Arrow batch
-    fans out through a bounded thread pool (``max_concurrency`` in-flight
-    ``model.complete_one`` calls per worker — total in-flight =
-    partitions × max_concurrency, the knob that matters against a
-    rate-limited endpoint at 100 TB). One model instance per Python
-    worker, created lazily inside the task.
+    fans out through a thread pool. ``max_concurrency`` is the TOTAL
+    number of in-flight ``model.complete_one`` calls for the stage —
+    the knob that matters against a rate-limited endpoint. The stage
+    repartitions its (id, prompt) rows to the session's default
+    parallelism ``n`` (an explicit count, which AQE keeps; a groupBy
+    upstream is otherwise coalesced to about one partition at run time)
+    and gives each task ``ceil(max_concurrency / n)`` threads (so a
+    budget that is not a multiple of ``n`` rounds up to one). Deciding
+    this needs no job at build time, and shuffling a row costs far less
+    than the model call it feeds. The default of 128 is measured: the
+    summaries benchmark (200 documents a pass, 100 ms endpoint, 4 cores)
+    ran 78-83 items/s at the old 32 in flight, 117-144 (median 122) at
+    128, and 116-139 at 256 — no clear gain for twice the load on the
+    endpoint. One model instance per task, created lazily inside it;
+    the threads belong to the Python worker and outlive the task
+    (``_worker_pool``).
 
     Retry policy (VERDICT r10 #7 — the reference pins tenacity for this,
     requirements.txt:66): per PROMPT, bounded at ``max_retries``
@@ -123,8 +135,45 @@ def summarize_isolated(
     duplicate nor drop and each successful call is billed exactly once;
     a permanently failing prompt costs its retries but poisons nothing
     else."""
-    from concurrent.futures import ThreadPoolExecutor
+    return _inference(
+        df, id_col, prompt_col, model_factory, (),
+        max_retries, base_delay, max_delay, max_concurrency,
+    )
 
+
+_POOL: tuple[int, ThreadPoolExecutor] | None = None
+
+
+def _worker_pool(threads: int) -> ThreadPoolExecutor:
+    """This Python worker's inference threads. A worker runs one task at
+    a time and Spark reuses it, so keeping the pool across tasks lets
+    later tasks and passes find the threads, and the keep-alive
+    connection each holds (``OpenAIChatModel``), already open. A stage
+    that asks for another width replaces it."""
+    global _POOL
+    if _POOL is None or _POOL[0] != threads:
+        if _POOL is not None:
+            _POOL[1].shutdown(wait=False)
+        _POOL = (threads, ThreadPoolExecutor(max_workers=threads))
+    return _POOL[1]
+
+
+def _inference(
+    df: DataFrame,
+    id_col: str,
+    prompt_col: str,
+    model_factory: Callable[[], object],
+    carry: tuple[str, ...],
+    max_retries: int = 3,
+    base_delay: float = 0.1,
+    max_delay: float = 30.0,
+    max_concurrency: int = 128,
+) -> DataFrame:
+    """``summarize_isolated``'s stage (same defaults), with the ``carry``
+    columns of ``df`` passed through beside each row's answer."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    threads = -(-max_concurrency // n)
+    cols = list(dict.fromkeys((id_col, prompt_col, *carry)))
     out_schema = T.StructType(
         [
             T.StructField(id_col, T.LongType()),
@@ -132,6 +181,7 @@ def summarize_isolated(
             T.StructField("cost", T.DoubleType()),
             T.StructField("error", T.StringType()),
         ]
+        + [df.schema[c] for c in carry]
     )
 
     def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -151,23 +201,20 @@ def summarize_isolated(
                     time.sleep(min(delay, max_delay))
             raise AssertionError("unreachable")  # loop always returns
 
-        with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
-            for pdf in batches:
-                results = list(pool.map(call, pdf[prompt_col].tolist()))
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col].astype("int64"),
-                        "response_json": [r[0] for r in results],
-                        "cost": [r[1] for r in results],
-                        "error": [r[2] for r in results],
-                    }
-                )
+        pool = _worker_pool(threads)
+        for pdf in batches:
+            results = list(pool.map(call, pdf[prompt_col].tolist()))
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col].astype("int64"),
+                    "response_json": [r[0] for r in results],
+                    "cost": [r[1] for r in results],
+                    "error": [r[2] for r in results],
+                    **{c: pdf[c] for c in carry},
+                }
+            )
 
-    from unfccc_documents_database_sandbox_spark.catalog import spread
-
-    # spread before the Python stage: inference parallelism = partitions,
-    # and a row-group-bound scan would pin the whole batch to one worker.
-    return spread(df.select(id_col, prompt_col)).mapInPandas(infer, out_schema)
+    return df.select(*cols).repartition(n).mapInPandas(infer, out_schema)
 
 
 RETRY_SUFFIX = (
@@ -200,52 +247,45 @@ def summarize_structured(
        response_json for forensics. Cost bills BOTH calls — the failed
        first attempt was still spent tokens (U4 honesty).
 
-    Scale shape: validation is a JVM ``from_json`` over the full result;
-    the retry touches only the failing slice, which re-reads prompts via
-    a BROADCAST semi-join of the (tiny) failed-id set against the prompt
-    frame — the dedup_incremental anti-join pattern. At 100 TB the first
-    stage's output is a materialized table and the retry is an
-    O(failures) scan, never a second full inference pass. No driver-side
-    loops: the "retry once then dead-letter" policy is one static plan,
-    not an unbounded convergence loop (a deeper retry ladder unrolls the
-    same way)."""
-    # localCheckpoint pins the first pass: three branches consume it
-    # (settled, the retry input, the retried cost join) and Spark has no
-    # cross-branch subplan reuse — unpinned, the model-calling stage
-    # would re-execute per branch, tripling real-API spend against a
-    # single-billed cost column and (for a nondeterministic model)
-    # letting a row fall into neither or both branches. Lazy (eager=
-    # False) so building the frame stays free; the first action
-    # materializes it once.
+    Scale shape: validation is a JVM ``from_json`` over the full result.
+    The first pass is pinned with each row's prompt beside its answer,
+    so the retry input is a filter of that pin: at 100 TB the retry is
+    an O(failures) scan of the materialized first pass, never a second
+    read of the prompt frame or a second full inference pass, and the
+    first-call cost rides through the re-prompt stage to the bill
+    without a join. No driver-side loops: the "retry once then
+    dead-letter" policy is one static plan, not an unbounded convergence
+    loop (a deeper retry ladder unrolls the same way)."""
+    # localCheckpoint pins the first pass: two branches consume it
+    # (settled and the retry input) and Spark has no cross-branch
+    # subplan reuse — unpinned, the model-calling stage would re-execute
+    # per branch, doubling real-API spend against a single-billed cost
+    # column and (for a nondeterministic model) letting a row fall into
+    # neither or both branches. Lazy (eager=False), so no model call runs
+    # at build (under AQE, building it does run the upstream's shuffle
+    # stages, whose output the first action then reuses); the first
+    # action materializes it once.
     first = parse_structured(
-        summarize_isolated(
-            df, id_col, prompt_col, model_factory, **stage_kw
+        _inference(
+            df, id_col, prompt_col, model_factory, (prompt_col,), **stage_kw
         )
     ).localCheckpoint(eager=False)
     settled = first.filter(
         F.col("summary").isNotNull() | F.col("error").isNotNull()
-    )
-    failed = first.filter(
+    ).select(id_col, "response_json", "cost", "error", "summary")
+    retry_in = first.filter(
         F.col("summary").isNull() & F.col("error").isNull()
-    ).select(id_col, F.col("cost").alias("first_cost"))
-
-    retry_in = df.select(id_col, prompt_col).join(
-        F.broadcast(failed), id_col
+    ).select(
+        id_col,
+        F.concat(F.col(prompt_col), F.lit(RETRY_SUFFIX)).alias(prompt_col),
+        F.col("cost").alias("first_cost"),
     )
     retried = parse_structured(
-        summarize_isolated(
-            retry_in.select(
-                id_col,
-                F.concat(F.col(prompt_col), F.lit(RETRY_SUFFIX)).alias(
-                    prompt_col
-                ),
-            ),
-            id_col,
-            prompt_col,
-            model_factory,
+        _inference(
+            retry_in, id_col, prompt_col, model_factory, ("first_cost",),
             **stage_kw,
         )
-    ).join(F.broadcast(failed), id_col)
+    )
 
     resolved = retried.select(
         id_col,

@@ -14,10 +14,12 @@ endpoint (vLLM, llama.cpp server, an API gateway) serves:
   (and DuckDB-oracle-checked) without a network.
 - ``OpenAIChatModel.complete_one`` sends one POST per prompt (the
   protocol is one conversation per request; the stage fans prompts out
-  through its thread pool, as LangChain's ``.batch`` does client-side).
-  Transport failures propagate; the per-prompt retry in
-  ``llm.batch.summarize_isolated`` owns recovery (ONE retry policy), and
-  a 429's ``Retry-After`` header is surfaced as ``exc.retry_after``.
+  through its thread pool, as LangChain's ``.batch`` does client-side)
+  over its thread's HTTP/1.1 keep-alive connection, so a connection
+  carries many requests. Transport failures propagate; the per-prompt
+  retry in ``llm.batch.summarize_isolated`` owns recovery (ONE retry
+  policy), and a 429's ``Retry-After`` header is surfaced as
+  ``exc.retry_after``.
 - ``StubOpenAIEndpoint`` builds the FULL wire-format response body
   deterministically (content = the stub summary JSON, usage = the
   chars/4 token heuristic) and feeds it through the SAME
@@ -28,18 +30,22 @@ Stdlib-only imports: the benchmark's mock endpoint (perfbench/endpoint.py)
 loads this file by path for ``stub_wire_response``.
 
 Instances are created inside the Python worker (``model_factory``
-closure), so each executor fans out its own connections — throughput
-scales with partitions instead of being capped by one driver-side
-client.
+closure), so each executor opens its own connections; the stage's
+``max_concurrency`` budget, not one driver-side client, caps how many
+are in flight at once.
 """
 
 from __future__ import annotations
 
 import hashlib
+import http.client
+import io
 import json
 import math
+import select
+import threading
 import urllib.error
-import urllib.request
+from urllib.parse import urlsplit
 
 # Default per-token prices (USD). Chosen so the micro-USD cost of the
 # deterministic stub is integral: cost_micros = prompt_tokens +
@@ -101,11 +107,28 @@ def _attach_retry_after(exc: urllib.error.HTTPError) -> None:
             pass  # HTTP-date form: fall back to the backoff curve
 
 
+# Each thread's one keep-alive connection, shared by every model instance
+# the thread serves: the stage builds a model per task, but its pool
+# threads outlive the task, and so does their connection.
+_THREAD = threading.local()
+
+
+def _dropped(sock) -> bool:
+    """An idle keep-alive socket that polls readable has been closed (or
+    written to) by the server: urllib3's ``is_connection_dropped``."""
+    if hasattr(select, "poll"):
+        p = select.poll()
+        p.register(sock, select.POLLIN)
+        return bool(p.poll(0))
+    return bool(select.select([sock], [], [], 0)[0])
+
+
 class OpenAIChatModel:
     """``complete_one`` against a real OpenAI-compatible endpoint
-    (``.../v1/chat/completions``): one POST per prompt, wire-format
-    request/response, usage-priced cost. Deliberately retry-free — the
-    per-prompt retry in ``llm.batch.summarize_isolated`` owns recovery."""
+    (``.../v1/chat/completions``): one POST per prompt on the calling
+    thread's keep-alive connection, wire-format request/response,
+    usage-priced cost. Deliberately retry-free — the per-prompt retry
+    in ``llm.batch.summarize_isolated`` owns recovery."""
 
     def __init__(self, endpoint: str, model: str = "stub-model",
                  timeout: float = 10.0, api_key: str | None = None,
@@ -117,24 +140,54 @@ class OpenAIChatModel:
         self.api_key = api_key
         self.usd_per_prompt_token = usd_per_prompt_token
         self.usd_per_completion_token = usd_per_completion_token
+        url = urlsplit(endpoint)
+        self._key = (url.scheme, url.netloc, timeout)
+        self._path = url.path + (f"?{url.query}" if url.query else "")
+
+    def _connection(self) -> http.client.HTTPConnection:
+        """This thread's connection to the endpoint. One the server closed
+        while idle is replaced before a request is written to it, as is
+        one to another endpoint."""
+        conn = getattr(_THREAD, "conn", None)
+        if conn is not None and (_THREAD.key != self._key or (
+                conn.sock is not None and _dropped(conn.sock))):
+            conn.close()
+            conn = None
+        if conn is None:
+            scheme, netloc, timeout = self._key
+            cls = (http.client.HTTPSConnection if scheme == "https"
+                   else http.client.HTTPConnection)
+            conn = _THREAD.conn = cls(netloc, timeout=timeout)
+            _THREAD.key = self._key
+        return conn
 
     def complete_one(self, prompt: str) -> dict:
         headers = {"Content-Type": "application/json"}
         if self.api_key:
             headers["Authorization"] = f"Bearer {self.api_key}"
-        req = urllib.request.Request(
-            self.endpoint,
-            data=json.dumps(chat_payload(self.model, prompt)).encode("utf-8"),
-            headers=headers,
-        )
+        conn = self._connection()
         try:
-            with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-                body = json.load(resp)
-        except urllib.error.HTTPError as exc:
-            _attach_retry_after(exc)
+            conn.request(
+                "POST", self._path,
+                body=json.dumps(chat_payload(self.model, prompt)).encode("utf-8"),
+                headers=headers,
+            )
+            resp = conn.getresponse()
+            data = resp.read()
+        except BaseException:
+            # The server may have received the POST, so it is never
+            # re-sent here (that could bill it twice): drop the connection
+            # and leave the decision to the stage's retry.
+            conn.close()
             raise
+        if not 200 <= resp.status < 300:
+            exc = urllib.error.HTTPError(self.endpoint, resp.status, resp.reason,
+                                         resp.headers, io.BytesIO(data))
+            _attach_retry_after(exc)
+            raise exc
         return parse_chat_completion(
-            body, self.usd_per_prompt_token, self.usd_per_completion_token)
+            json.loads(data), self.usd_per_prompt_token,
+            self.usd_per_completion_token)
 
     # perfbench/tests/test_endpoint.py calls the old private name, and the
     # benchmark's files change only with the benchmark itself

@@ -366,7 +366,7 @@ def udf_llm_structured_retry(spark, sf_dir):
     pydantic-retry behavior LangChain structured output gives the
     reference (generate_decisions_summaries.py:92-95), relationally:
     from_json flags the invalid rows, ONE amended re-prompt round runs
-    over only that slice (broadcast id-join back to the prompts), and
+    over only that slice (read from the pinned first pass), and
     cost bills both calls for every retried row — recovered rows carry
     the hash of the AMENDED prompt, which the oracle restates as
     sha256(prompt || suffix). Transport-level dead-lettering
