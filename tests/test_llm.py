@@ -58,31 +58,18 @@ class _OpenAIWireHandler(BaseHTTPRequestHandler):
     retry_after`` when that is set), then with the full deterministic
     wire-format body. Keyed by payload hash, so the schedule is
     deterministic regardless of which worker connects when. Each valid
-    request is held ``hold_s`` seconds and counted in flight meanwhile;
-    ``connections`` counts the TCP connections served. HTTP/1.0 (the
-    default) closes every connection after its response; under HTTP/1.1
-    it stays open unless ``drop_idle`` closes it without saying so, as
-    a server timing out an idle keep-alive connection does."""
+    request is held ``hold_s`` seconds and counted in flight meanwhile."""
 
     failures: tuple[int, ...] = ()
     retry_after: str | None = None
     hold_s = 0.0
-    drop_idle = False
     attempts: dict[str, int] = {}
     bad_requests: list[str] = []
-    connections = 0
     inflight = 0
     inflight_max = 0
     lock = threading.Lock()
 
-    def handle(self):
-        with self.lock:
-            _OpenAIWireHandler.connections += 1
-        super().handle()
-
     def do_POST(self):  # noqa: N802 (http.server API)
-        if self.drop_idle:
-            self.close_connection = True  # and no "Connection: close"
         n = int(self.headers.get("Content-Length", "0"))
         payload = self.rfile.read(n)
         key = hashlib.sha256(payload).hexdigest()
@@ -96,7 +83,6 @@ class _OpenAIWireHandler(BaseHTTPRequestHandler):
             with self.lock:
                 self.bad_requests.append(json.dumps(body)[:200])
             self.send_response(400)
-            self.send_header("Content-Length", "0")
             self.end_headers()
             return
         with self.lock:
@@ -113,7 +99,6 @@ class _OpenAIWireHandler(BaseHTTPRequestHandler):
             self.send_response(status)
             if status == 429 and self.retry_after is not None:
                 self.send_header("Retry-After", self.retry_after)
-            self.send_header("Content-Length", "0")
             self.end_headers()
             return
         resp = stub_wire_response(
@@ -135,26 +120,23 @@ _BUDGET = inspect.signature(
 
 
 class _WireServer(ThreadingHTTPServer):
-    # the stage opens up to its whole in-flight budget of connections at
-    # once; the default listen backlog of 5 resets some of them, and a
-    # reset burns a retry the attempt ledger never sees
+    # the stage opens up to its whole in-flight budget of connections
+    # (one per request) at once; the default listen backlog of 5 resets
+    # some of them, and a reset burns a retry the attempt ledger never
+    # sees
     request_queue_size = _BUDGET
 
 
 @contextlib.contextmanager
 def _wire_server(failures: tuple[int, ...] = (),
-                 retry_after: str | None = None, hold_s: float = 0.0,
-                 protocol: str = "HTTP/1.0", drop_idle: bool = False):
+                 retry_after: str | None = None, hold_s: float = 0.0):
     """Serve ``_OpenAIWireHandler`` with the given failure schedule and
     fresh ledgers; yields the chat-completions URL."""
     _OpenAIWireHandler.failures = failures
     _OpenAIWireHandler.retry_after = retry_after
     _OpenAIWireHandler.hold_s = hold_s
-    _OpenAIWireHandler.protocol_version = protocol
-    _OpenAIWireHandler.drop_idle = drop_idle
     _OpenAIWireHandler.attempts = {}
     _OpenAIWireHandler.bad_requests = []
-    _OpenAIWireHandler.connections = 0
     _OpenAIWireHandler.inflight = 0
     _OpenAIWireHandler.inflight_max = 0
     server = _WireServer(("127.0.0.1", 0), _OpenAIWireHandler)
@@ -745,37 +727,23 @@ def test_structured_pass_evaluates_its_upstream_once(spark):
 
 def test_stage_in_flight_budget_is_stage_wide(spark):
     """``max_concurrency`` caps the stage's TOTAL in-flight requests:
-    with every request held 0.2 s, a 200-prompt stage peaks above the
-    old per-partition cap (4 partitions × 8) and never above the
-    budget."""
-    docs = spark.range(200).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("prompt "), F.col("id").cast("string")).alias("prompt"),
-    ).repartition(4)
-    with _wire_server(hold_s=0.2) as url:
-        out = llm_batch.summarize_isolated(
-            docs, model_factory=lambda: OpenAIChatModel(url)).collect()
-        peak = _OpenAIWireHandler.inflight_max
-    assert len(out) == 200 and all(r.error is None for r in out)
-    assert 32 < peak <= _BUDGET
-
-
-def test_openai_client_keeps_its_connection_alive():
-    """Under HTTP/1.1 one thread's requests share one connection, error
-    replies included; a connection the server closed while idle is
-    replaced before the next request instead of failing it."""
-    prompts = [f"prompt {i}" for i in range(6)]
-    with _wire_server(failures=(429,), protocol="HTTP/1.1") as url:
-        model = OpenAIChatModel(url)
-        for p in prompts:
-            with pytest.raises(Exception, match="429"):
-                model.complete_one(p)
-            assert model.complete_one(p)["response_json"].startswith(
-                '{"summary"')
-        assert _OpenAIWireHandler.connections == 1
-    with _wire_server(protocol="HTTP/1.1", drop_idle=True) as url:
-        model = OpenAIChatModel(url)
-        for p in prompts:
-            model.complete_one(p)
-            time.sleep(0.1)  # let the server's close reach this side
-        assert _OpenAIWireHandler.connections == len(prompts)
+    with every request held 0.2 s, a 200-prompt stage at the default
+    budget peaks above the old per-partition cap (4 partitions × 8) and
+    never above the budget. A budget the session's parallelism ``n``
+    does not divide (n + 1), or one below n, is never exceeded either:
+    no task rounds its share up."""
+    n = spark.sparkContext.defaultParallelism
+    for rows, budget, lower in ((200, _BUDGET, 32), (48, n + 1, 0),
+                                  (48, max(1, n // 2), 0)):
+        docs = spark.range(rows).select(
+            F.col("id").alias("doc_id"),
+            F.concat(F.lit("prompt "), F.col("id").cast("string"))
+            .alias("prompt"),
+        ).repartition(4)
+        with _wire_server(hold_s=0.2) as url:
+            out = llm_batch.summarize_isolated(
+                docs, model_factory=lambda: OpenAIChatModel(url),
+                max_concurrency=budget).collect()
+            peak = _OpenAIWireHandler.inflight_max
+        assert len(out) == rows and all(r.error is None for r in out)
+        assert lower < peak <= budget

@@ -108,19 +108,19 @@ def summarize_isolated(
     fans out through a thread pool. ``max_concurrency`` is the TOTAL
     number of in-flight ``model.complete_one`` calls for the stage —
     the knob that matters against a rate-limited endpoint. The stage
-    repartitions its (id, prompt) rows to the session's default
-    parallelism ``n`` (an explicit count, which AQE keeps; a groupBy
-    upstream is otherwise coalesced to about one partition at run time)
-    and gives each task ``ceil(max_concurrency / n)`` threads (so a
-    budget that is not a multiple of ``n`` rounds up to one). Deciding
+    repartitions its (id, prompt) rows to ``p = min(n,
+    max_concurrency)`` partitions, ``n`` the session's default
+    parallelism (an explicit count, which AQE keeps; a groupBy upstream
+    is otherwise coalesced to about one partition at run time), and
+    gives each task ``max_concurrency // p`` threads, so at most
+    ``max_concurrency`` calls are in flight whatever ``n`` is. Deciding
     this needs no job at build time, and shuffling a row costs far less
     than the model call it feeds. The default of 128 is measured: the
     summaries benchmark (200 documents a pass, 100 ms endpoint, 4 cores)
-    ran 78-83 items/s at the old 32 in flight, 117-144 (median 122) at
-    128, and 116-139 at 256 — no clear gain for twice the load on the
-    endpoint. One model instance per task, created lazily inside it;
-    the threads belong to the Python worker and outlive the task
-    (``_worker_pool``).
+    ran 74-80 items/s (median 77) at the old 32 in flight, 105-121
+    (median 113) at 128, and 102-125 at 256 — no clear gain for twice
+    the load on the endpoint. One model instance and one thread pool
+    per task, created lazily inside it.
 
     Retry policy (VERDICT r10 #7 — the reference pins tenacity for this,
     requirements.txt:66): per PROMPT, bounded at ``max_retries``
@@ -141,38 +141,22 @@ def summarize_isolated(
     )
 
 
-_POOL: tuple[int, ThreadPoolExecutor] | None = None
-
-
-def _worker_pool(threads: int) -> ThreadPoolExecutor:
-    """This Python worker's inference threads. A worker runs one task at
-    a time and Spark reuses it, so keeping the pool across tasks lets
-    later tasks and passes find the threads, and the keep-alive
-    connection each holds (``OpenAIChatModel``), already open. A stage
-    that asks for another width replaces it."""
-    global _POOL
-    if _POOL is None or _POOL[0] != threads:
-        if _POOL is not None:
-            _POOL[1].shutdown(wait=False)
-        _POOL = (threads, ThreadPoolExecutor(max_workers=threads))
-    return _POOL[1]
-
-
 def _inference(
     df: DataFrame,
     id_col: str,
     prompt_col: str,
     model_factory: Callable[[], object],
     carry: tuple[str, ...],
-    max_retries: int = 3,
-    base_delay: float = 0.1,
-    max_delay: float = 30.0,
-    max_concurrency: int = 128,
+    max_retries: int,
+    base_delay: float,
+    max_delay: float,
+    max_concurrency: int,
 ) -> DataFrame:
-    """``summarize_isolated``'s stage (same defaults), with the ``carry``
-    columns of ``df`` passed through beside each row's answer."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    threads = -(-max_concurrency // n)
+    """``summarize_isolated``'s stage, with the ``carry`` columns of
+    ``df`` passed through beside each row's answer."""
+    parts = min(df.sparkSession.sparkContext.defaultParallelism,
+                max_concurrency)
+    threads = max_concurrency // parts
     cols = list(dict.fromkeys((id_col, prompt_col, *carry)))
     out_schema = T.StructType(
         [
@@ -201,20 +185,20 @@ def _inference(
                     time.sleep(min(delay, max_delay))
             raise AssertionError("unreachable")  # loop always returns
 
-        pool = _worker_pool(threads)
-        for pdf in batches:
-            results = list(pool.map(call, pdf[prompt_col].tolist()))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].astype("int64"),
-                    "response_json": [r[0] for r in results],
-                    "cost": [r[1] for r in results],
-                    "error": [r[2] for r in results],
-                    **{c: pdf[c] for c in carry},
-                }
-            )
+        with ThreadPoolExecutor(max_workers=threads) as pool:
+            for pdf in batches:
+                results = list(pool.map(call, pdf[prompt_col].tolist()))
+                yield pd.DataFrame(
+                    {
+                        id_col: pdf[id_col].astype("int64"),
+                        "response_json": [r[0] for r in results],
+                        "cost": [r[1] for r in results],
+                        "error": [r[2] for r in results],
+                        **{c: pdf[c] for c in carry},
+                    }
+                )
 
-    return df.select(*cols).repartition(n).mapInPandas(infer, out_schema)
+    return df.select(*cols).repartition(parts).mapInPandas(infer, out_schema)
 
 
 RETRY_SUFFIX = (
@@ -228,15 +212,20 @@ def summarize_structured(
     id_col: str = "doc_id",
     prompt_col: str = "prompt",
     model_factory: Callable[[], object] = StubChatModel,
-    **stage_kw,
+    *,
+    max_retries: int = 3,
+    base_delay: float = 0.1,
+    max_delay: float = 30.0,
+    max_concurrency: int = 128,
 ) -> DataFrame:
     """U3 structured-output RETRY (r15, VERDICT r14 #9): the pydantic-
     retry behavior LangChain's structured output gives the reference
     (generate_decisions_summaries.py:92-95), re-expressed relationally.
 
-    1. Run the per-prompt isolated stage (X190 plumbing) and validate
-       every response with ``from_json`` — malformed output is a NULL
-       struct, not an exception.
+    1. Run the per-prompt isolated stage (X190 plumbing; the keyword
+       arguments are ``summarize_isolated``'s, for both rounds) and
+       validate every response with ``from_json`` — malformed output is
+       a NULL struct, not an exception.
     2. Rows that failed VALIDATION (transport succeeded, JSON invalid)
        get exactly ONE re-prompt round: the original prompt plus a
        format-reminder suffix (`RETRY_SUFFIX`), the LangChain
@@ -265,9 +254,10 @@ def summarize_structured(
     # at build (under AQE, building it does run the upstream's shuffle
     # stages, whose output the first action then reuses); the first
     # action materializes it once.
+    stage = (max_retries, base_delay, max_delay, max_concurrency)
     first = parse_structured(
         _inference(
-            df, id_col, prompt_col, model_factory, (prompt_col,), **stage_kw
+            df, id_col, prompt_col, model_factory, (prompt_col,), *stage
         )
     ).localCheckpoint(eager=False)
     settled = first.filter(
@@ -283,7 +273,7 @@ def summarize_structured(
     retried = parse_structured(
         _inference(
             retry_in, id_col, prompt_col, model_factory, ("first_cost",),
-            **stage_kw,
+            *stage,
         )
     )
 

@@ -12,14 +12,13 @@ endpoint (vLLM, llama.cpp server, an API gateway) serves:
   request/response bodies, shared by the live client and the
   deterministic stub so the parse + usage→cost arithmetic is exercised
   (and DuckDB-oracle-checked) without a network.
-- ``OpenAIChatModel.complete_one`` sends one POST per prompt (the
-  protocol is one conversation per request; the stage fans prompts out
-  through its thread pool, as LangChain's ``.batch`` does client-side)
-  over its thread's HTTP/1.1 keep-alive connection, so a connection
-  carries many requests. Transport failures propagate; the per-prompt
-  retry in ``llm.batch.summarize_isolated`` owns recovery (ONE retry
-  policy), and a 429's ``Retry-After`` header is surfaced as
-  ``exc.retry_after``.
+- ``OpenAIChatModel.complete_one`` sends one POST per prompt, each on
+  its own connection (the protocol is one conversation per request; the
+  stage fans prompts out through its thread pool, as LangChain's
+  ``.batch`` does client-side).
+  Transport failures propagate; the per-prompt retry in
+  ``llm.batch.summarize_isolated`` owns recovery (ONE retry policy), and
+  a 429's ``Retry-After`` header is surfaced as ``exc.retry_after``.
 - ``StubOpenAIEndpoint`` builds the FULL wire-format response body
   deterministically (content = the stub summary JSON, usage = the
   chars/4 token heuristic) and feeds it through the SAME
@@ -38,14 +37,10 @@ are in flight at once.
 from __future__ import annotations
 
 import hashlib
-import http.client
-import io
 import json
 import math
-import select
-import threading
 import urllib.error
-from urllib.parse import urlsplit
+import urllib.request
 
 # Default per-token prices (USD). Chosen so the micro-USD cost of the
 # deterministic stub is integral: cost_micros = prompt_tokens +
@@ -107,28 +102,11 @@ def _attach_retry_after(exc: urllib.error.HTTPError) -> None:
             pass  # HTTP-date form: fall back to the backoff curve
 
 
-# Each thread's one keep-alive connection, shared by every model instance
-# the thread serves: the stage builds a model per task, but its pool
-# threads outlive the task, and so does their connection.
-_THREAD = threading.local()
-
-
-def _dropped(sock) -> bool:
-    """An idle keep-alive socket that polls readable has been closed (or
-    written to) by the server: urllib3's ``is_connection_dropped``."""
-    if hasattr(select, "poll"):
-        p = select.poll()
-        p.register(sock, select.POLLIN)
-        return bool(p.poll(0))
-    return bool(select.select([sock], [], [], 0)[0])
-
-
 class OpenAIChatModel:
     """``complete_one`` against a real OpenAI-compatible endpoint
-    (``.../v1/chat/completions``): one POST per prompt on the calling
-    thread's keep-alive connection, wire-format request/response,
-    usage-priced cost. Deliberately retry-free — the per-prompt retry
-    in ``llm.batch.summarize_isolated`` owns recovery."""
+    (``.../v1/chat/completions``): one POST per prompt, wire-format
+    request/response, usage-priced cost. Deliberately retry-free — the
+    per-prompt retry in ``llm.batch.summarize_isolated`` owns recovery."""
 
     def __init__(self, endpoint: str, model: str = "stub-model",
                  timeout: float = 10.0, api_key: str | None = None,
@@ -140,54 +118,24 @@ class OpenAIChatModel:
         self.api_key = api_key
         self.usd_per_prompt_token = usd_per_prompt_token
         self.usd_per_completion_token = usd_per_completion_token
-        url = urlsplit(endpoint)
-        self._key = (url.scheme, url.netloc, timeout)
-        self._path = url.path + (f"?{url.query}" if url.query else "")
-
-    def _connection(self) -> http.client.HTTPConnection:
-        """This thread's connection to the endpoint. One the server closed
-        while idle is replaced before a request is written to it, as is
-        one to another endpoint."""
-        conn = getattr(_THREAD, "conn", None)
-        if conn is not None and (_THREAD.key != self._key or (
-                conn.sock is not None and _dropped(conn.sock))):
-            conn.close()
-            conn = None
-        if conn is None:
-            scheme, netloc, timeout = self._key
-            cls = (http.client.HTTPSConnection if scheme == "https"
-                   else http.client.HTTPConnection)
-            conn = _THREAD.conn = cls(netloc, timeout=timeout)
-            _THREAD.key = self._key
-        return conn
 
     def complete_one(self, prompt: str) -> dict:
         headers = {"Content-Type": "application/json"}
         if self.api_key:
             headers["Authorization"] = f"Bearer {self.api_key}"
-        conn = self._connection()
+        req = urllib.request.Request(
+            self.endpoint,
+            data=json.dumps(chat_payload(self.model, prompt)).encode("utf-8"),
+            headers=headers,
+        )
         try:
-            conn.request(
-                "POST", self._path,
-                body=json.dumps(chat_payload(self.model, prompt)).encode("utf-8"),
-                headers=headers,
-            )
-            resp = conn.getresponse()
-            data = resp.read()
-        except BaseException:
-            # The server may have received the POST, so it is never
-            # re-sent here (that could bill it twice): drop the connection
-            # and leave the decision to the stage's retry.
-            conn.close()
-            raise
-        if not 200 <= resp.status < 300:
-            exc = urllib.error.HTTPError(self.endpoint, resp.status, resp.reason,
-                                         resp.headers, io.BytesIO(data))
+            with urllib.request.urlopen(req, timeout=self.timeout) as resp:
+                body = json.load(resp)
+        except urllib.error.HTTPError as exc:
             _attach_retry_after(exc)
-            raise exc
+            raise
         return parse_chat_completion(
-            json.loads(data), self.usd_per_prompt_token,
-            self.usd_per_completion_token)
+            body, self.usd_per_prompt_token, self.usd_per_completion_token)
 
     # perfbench/tests/test_endpoint.py calls the old private name, and the
     # benchmark's files change only with the benchmark itself
