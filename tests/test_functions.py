@@ -263,6 +263,91 @@ def test_adc_query_collect_is_bounded(spark):
     assert len(S._bounded_query_rows(small, "vec_id")) == 3
 
 
+def _jobs_in_group(spark, fn):
+    """Run ``fn`` under a fresh job group; return (its result, the number
+    of Spark jobs it ran)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    # job starts reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_trainers_reproduce_the_pinned_literals(spark):
+    """The oracle-exact twins' pinned literals are the trainers' sf0.01
+    fits, rounded as pinned — so "regenerate by re-running the trainer"
+    holds, and any change to the training sample, its order or the rng
+    draw order shows here."""
+    import numpy as np
+
+    from tests.conftest import SF_CORRECT
+    from unfccc_documents_database_sandbox_spark.catalog import load_table
+    from unfccc_documents_database_sandbox_spark.operators import similarity as S
+    from unfccc_documents_database_sandbox_spark.plans.ivf_centroids import IVF_C
+    from unfccc_documents_database_sandbox_spark.plans.ivfpq_codebook import (
+        IVFPQ_CB,
+        IVFPQ_CENT,
+    )
+    from unfccc_documents_database_sandbox_spark.plans.pq_codebook import PQ_CB
+
+    emb = load_table(spark, SF_CORRECT, "embeddings")
+
+    def flat(fit, dp):
+        return [round(float(v), dp) for v in np.ravel(fit)]
+
+    assert flat(S.train_pq_codebooks(emb, m=8, k=8, seed=42), 6) == PQ_CB
+    assert flat(S.train_ivf_centroids(emb, n_cells=8, iters=8), 4) == IVF_C
+    cents, books = S.train_ivfpq_index(emb, n_cells=4, m=8, k=8)
+    assert flat(cents, 6) == IVFPQ_CENT
+    assert flat(books, 6) == IVFPQ_CB
+
+
+def test_ivfpq_fit_collects_one_sample(spark):
+    """train_ivfpq_index fits the coarse quantizer and the residual
+    codebooks from one collected sample, so it runs as many jobs as
+    train_ivf_centroids alone."""
+    from tests.conftest import SF_CORRECT
+    from unfccc_documents_database_sandbox_spark.catalog import load_table
+    from unfccc_documents_database_sandbox_spark.operators import similarity as S
+
+    emb = load_table(spark, SF_CORRECT, "embeddings")
+    _, ivf_jobs = _jobs_in_group(spark, lambda: S.train_ivf_centroids(emb, n_cells=4))
+    _, ivfpq_jobs = _jobs_in_group(
+        spark, lambda: S.train_ivfpq_index(emb, n_cells=4, m=8, k=8)
+    )
+    assert ivf_jobs >= 1
+    assert ivfpq_jobs == ivf_jobs
+
+
+def test_ann_index_memo_reuses_the_fit_without_holding_sessions(spark):
+    """The ANN keys memoize their trained index per (application id,
+    sf_dir, kind): a second sim_topk_ivf build runs no Spark job (no
+    training collect), and no memo key holds a SparkSession, so a stopped
+    session is not kept alive."""
+    from pyspark.sql import SparkSession
+
+    from tests.conftest import SF_CORRECT
+    from unfccc_documents_database_sandbox_spark.plans import similarity as PS
+    from unfccc_documents_database_sandbox_spark.registry import load_all_plans, lookup
+
+    load_all_plans()
+    build = lookup("sim_topk_ivf").build
+    first = build(spark, SF_CORRECT)
+    second, jobs = _jobs_in_group(spark, lambda: build(spark, SF_CORRECT))
+    assert jobs == 0
+    assert sorted(map(tuple, second.collect())) == sorted(map(tuple, first.collect()))
+    assert (spark.sparkContext.applicationId, SF_CORRECT, "ivf") in PS._INDEX
+    assert not any(isinstance(part, SparkSession) for key in PS._INDEX for part in key)
+
+
 def test_observation_metrics_ride_the_action(spark):
     """Operational-metrics surface (df.observe + Observation): audit
     counters computed DURING the action — zero extra scans, exactly what

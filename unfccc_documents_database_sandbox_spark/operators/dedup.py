@@ -113,27 +113,6 @@ def shingles_raw(
     ).select(id_col, hashed.alias("token"))
 
 
-def _token_hash(tokens: DataFrame) -> F.Column:
-    """64-bit hash of the token column: pass pre-hashed long tokens through,
-    hash string tokens with xxhash64."""
-    if dict(tokens.dtypes).get("token") == "bigint":
-        return F.col("token")
-    return F.xxhash64("token")
-
-
-def minhash_signatures(
-    tokens: DataFrame, id_col: str = "doc_id", num_hashes: int = 16
-) -> DataFrame:
-    """Per-doc MinHash signature: sig[i] = min over tokens of
-    (a_i * h31(token) + b_i) mod M31. One grouped aggregation."""
-    h = _token_hash(tokens).bitwiseAND(F.lit(0x7FFFFFFF))
-    mins = [
-        F.min((F.lit(a) * h + F.lit(b)) % MERSENNE_31).alias(f"mh{i}")
-        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-    ]
-    return tokens.groupBy(id_col).agg(*mins)
-
-
 def shingle_hash_sets(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -149,14 +128,10 @@ def shingle_hash_sets(
     exploded form, where they contribute zero token rows)."""
     from unfccc_documents_database_sandbox_spark.functions.text import shingles
 
-    if portable_hash_digits is None:
-        def hfn(s):
+    def hfn(s):
+        if portable_hash_digits is None:
             return F.xxhash64(s)
-    else:
-        def hfn(s):
-            return F.conv(F.substring(F.md5(s), 1, portable_hash_digits), 16, 10).cast(
-                "long"
-            )
+        return portable_shingle_hash(s, portable_hash_digits)
 
     hashed = F.array_distinct(F.transform(shingles(F.col(text_col), n), hfn))
     return docs.select(id_col, hashed.alias("hset")).filter(F.size("hset") > 0)
@@ -169,11 +144,11 @@ def minhash_signatures_rowlocal(
     slice WITHOUT the shingle explode or the grouped-agg shuffle:
     sig[i] = array_min(transform(hset, h -> (a_i*(h&0x7FFFFFFF) + b_i) % M31)).
 
-    Semantically identical to ``minhash_signatures`` over ``shingles_raw``
+    Semantically identical to a per-token grouped min over ``shingles_raw``
     tokens (min over the multiset = min over the set, and the 31-bit mask
     commutes with dedup), but the whole signature stage is map-only — no
     row fan-out, no shuffle. At 100 TB that removes the single largest
-    shuffle of the pipeline (the per-token groupBy). VERDICT r04 #5."""
+    shuffle of the pipeline (the per-token groupBy)."""
     mins = [
         F.array_min(
             F.transform(
@@ -529,11 +504,13 @@ def simhash_signatures(
 ) -> DataFrame:
     """64-bit SimHash per doc, fully JVM-side: for each bit position, sum
     ±1 over tokens (sign of the token hash's bit), then take the sign bit.
+    ``tokens`` are ``shingles_distinct`` rows, whose token is already a
+    bigint hash.
 
     Implemented by exploding each token into (bit_idx, ±1) contributions and
     re-aggregating — two narrow shuffles, no Python, no 64-column explosion.
     """
-    h = _token_hash(tokens)
+    h = F.col("token")
     contribs = F.array(
         *[
             F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, F.lit(1)).otherwise(

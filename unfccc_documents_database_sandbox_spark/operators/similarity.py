@@ -1,22 +1,44 @@
 """Similarity search over embedding columns (north star L3).
 
-Two paths, mirroring how a 100 TB ANN pipeline is actually built:
-- brute-force cosine top-k — the exact baseline. Queries are broadcast
-  (they're few); the corpus streams through map-side — no corpus shuffle,
-  O(|Q|·N) JVM-side arithmetic via zip_with/aggregate (no Python).
-- LSH-bucketed (random hyperplane) — the scale path. Each vector gets a
-  short sign-bit bucket id; only same-bucket pairs are compared. Buckets
-  are deterministic (fixed integer hyperplanes), so results are stable.
+Five top-k operators, each returning (query_id, neighbor_id, rank, score):
+- ``brute_force_topk``: exact cosine. Queries are broadcast (they're few);
+  the corpus streams through map-side with no corpus shuffle, and the dot
+  products are JVM zip_with/aggregate folds (no Python).
+- ``lsh_bucket_topk``: random-hyperplane LSH. Each vector gets a sign-bit
+  bucket id from fixed integer hyperplanes; only same-bucket pairs are
+  compared (one equi-join shuffle on bucket).
+- ``ivf_topk``: inverted file. A k-means coarse quantizer assigns every
+  vector to a cell; a query probes its ``nprobe`` nearest cells (an
+  equi-join on cell). nprobe = n_cells gives the exact answer.
+- ``pq_topk``: product quantization with asymmetric distance (ADC). The
+  corpus is encoded to m codes; each query scores by summing m lookups
+  into its own m×k table.
+- ``ivfpq_topk``: IVF cell pruning composed with PQ codes of the residual,
+  then an exact re-rank of the ADC shortlist.
 
-- IVF (inverted file) — the other standard scale path: a k-means coarse
-  quantizer assigns every vector to a cell; a query probes only its
-  ``nprobe`` nearest cells. Index build is a one-time numpy Lloyd fit on a
-  bounded sample; search is an equi-join on cell id. With nprobe = n_cells
-  it degrades gracefully to the exact answer (tested).
+They share one kernel per building block:
+- ``_unit_sample``: the training sample;
+- ``_lloyd``: the k-means fit, and ``_pq_fit`` one Lloyd fit per subspace;
+- ``_nearest``: cell assignment, the argmin of ``_sqdist``;
+- ``_pq_encode``, ``_adc_table`` and ``_adc_fold``: PQ encode and ADC;
+- ``_side``: the double-vector query or corpus side of a cosine join;
+- ``_topk``: the per-query rank tail.
+
+Invariants:
+- the training sample is the ``max_train`` LOWEST ids (a top-k heap, no
+  full sort), so a fixed seed gives the same centroids on any partition
+  layout; the rng draws once per fit, subspaces in order;
+- ``_unit`` leaves zero vectors zero instead of dividing by 0, and zero
+  vectors are dropped from training samples (they carry no direction);
+- ties in every ranking go to the lowest ``neighbor_id``; a numpy argmin
+  takes the first minimum, and so does the Column-side argmin of the
+  oracle-exact twins in ``plans/similarity.py``
+  (``array_position(dl, array_min(dl)) - 1``).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -33,6 +55,37 @@ def with_norm(df: DataFrame, vec_col: str = "vec") -> DataFrame:
     return df.withColumn("norm", F.sqrt(dot(F.col(vec_col), F.col(vec_col))))
 
 
+def _side(df: DataFrame, id_col: str, id_name: str, p: str, *extra) -> DataFrame:
+    """(id_name, {p}vec, {p}norm, *extra): one side of a cosine join; ``p``
+    is "q" for queries and "c" for the corpus. ``extra`` columns may read
+    the side's "vec"."""
+    return with_norm(as_double_vec(df)).select(
+        F.col(id_col).alias(id_name),
+        F.col("vec").alias(f"{p}vec"),
+        F.col("norm").alias(f"{p}norm"),
+        *extra,
+    )
+
+
+def _cos() -> F.Column:
+    return dot(F.col("qvec"), F.col("cvec")) / (F.col("qnorm") * F.col("cnorm"))
+
+
+def _rank(score: str) -> F.Column:
+    """Per-query row_number by ``score`` descending, ties to the lowest
+    neighbor_id."""
+    w = Window.partitionBy("query_id").orderBy(F.col(score).desc(), F.col("neighbor_id"))
+    return F.row_number().over(w)
+
+
+def _topk(scored: DataFrame, score: str, k: int) -> DataFrame:
+    return (
+        scored.withColumn("rank", _rank(score).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", F.round(score, 4).alias("score"))
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -41,28 +94,16 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k: broadcast the (small) query set against the
     corpus; rank per query. Returns (query_id, neighbor_id, rank, score)."""
-    # r17 (guide §2.5): the corpus side feeds a BroadcastNestedLoopJoin
-    # (non-equi != condition) and inherits the parquet scan's few
-    # row-group splits — spread() it so the per-pair dot products use
-    # the whole core count (adaptive no-op when already wide).
+    # the corpus side feeds a BroadcastNestedLoopJoin (non-equi !=
+    # condition) and inherits the parquet scan's few row-group splits —
+    # spread() it so the per-pair dot products use the whole core count
+    # (adaptive no-op when already wide).
     from unfccc_documents_database_sandbox_spark.catalog import spread
 
-    c = with_norm(as_double_vec(spread(corpus))).select(
-        F.col(id_col).alias("neighbor_id"), F.col("vec").alias("cvec"), F.col("norm").alias("cnorm")
-    )
-    q = with_norm(as_double_vec(queries)).select(
-        F.col(id_col).alias("query_id"), F.col("vec").alias("qvec"), F.col("norm").alias("qnorm")
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos", dot(F.col("qvec"), F.col("cvec")) / (F.col("qnorm") * F.col("cnorm")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 4).alias("score"))
-    )
+    c = _side(spread(corpus), id_col, "neighbor_id", "c")
+    q = _side(queries, id_col, "query_id", "q")
+    scored = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
+    return _topk(scored.withColumn("cos", _cos()), "cos", k)
 
 
 # deterministic integer hyperplanes for sign-bit LSH (values in [-8, 8])
@@ -83,38 +124,104 @@ def lsh_bucket_topk(
     the 100 TB path where broadcast-everything is impossible."""
     planes = [F.array(*[F.lit(v) for v in _hyperplane(j, dim)]) for j in range(n_planes)]
 
-    def bucket(vec: F.Column) -> F.Column:
-        bits = [
-            F.when(dot(vec, planes[j]) >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-            for j in range(n_planes)
-        ]
+    def bucket() -> F.Column:
         out = F.lit(0)
-        for b in bits:
-            out = out + b
-        return out.cast("long")
+        for j in range(n_planes):
+            out = out + F.when(dot(F.col("vec"), planes[j]) >= 0, F.lit(1 << j)).otherwise(F.lit(0))
+        return out.cast("long").alias("bucket")
 
-    c = with_norm(as_double_vec(corpus)).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("vec").alias("cvec"),
-        F.col("norm").alias("cnorm"),
-        bucket(F.col("vec")).alias("bucket"),
+    c = _side(corpus, id_col, "neighbor_id", "c", bucket())
+    q = _side(queries, id_col, "query_id", "q", bucket())
+    scored = c.join(q, "bucket").filter(F.col("neighbor_id") != F.col("query_id"))
+    return _topk(scored.withColumn("cos", _cos()), "cos", k)
+
+
+def _unit(x) -> np.ndarray:
+    """Row-wise L2 normalize; zero vectors stay zero instead of NaN-ing
+    the batch."""
+    x = np.array(x, dtype="float64")
+    n = np.linalg.norm(x, axis=1, keepdims=True)
+    n[n == 0] = 1.0
+    return x / n
+
+
+def _sqdist(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """Squared L2 from each row of x to each centroid, up to the row
+    constant |x|²: |c|² − 2·x·cᵀ."""
+    return (cents * cents).sum(axis=1)[None, :] - 2.0 * (x @ cents.T)
+
+
+def _nearest(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """Index of each row's nearest centroid (first minimum on ties)."""
+    return _sqdist(x, cents).argmin(axis=1)
+
+
+def _unit_sample(corpus: DataFrame, max_train: int, id_col: str) -> np.ndarray:
+    """The ``max_train`` lowest-id embeddings, L2-normalized, zero vectors
+    dropped. One job: a TakeOrdered heap, no full sort. A bare limit() on
+    an unordered DataFrame picks whatever partitions answer first, so the
+    fit would vary across runs and partition layouts."""
+    sample = (
+        corpus.select(F.col(id_col).alias("i"), F.col("embedding").alias("e"))
+        .orderBy("i")
+        .limit(max_train)
     )
-    q = with_norm(as_double_vec(queries)).select(
-        F.col(id_col).alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("norm").alias("qnorm"),
-        bucket(F.col("vec")).alias("bucket"),
-    )
-    scored = (
-        c.join(q, "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos", dot(F.col("qvec"), F.col("cvec")) / (F.col("qnorm") * F.col("cnorm")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 4).alias("score"))
+    x = np.array([r.e for r in sample.collect()], dtype="float64")
+    norms = np.linalg.norm(x, axis=1, keepdims=True)
+    x = x[norms[:, 0] > 0]
+    x /= norms[norms[:, 0] > 0].reshape(-1, 1)
+    return x
+
+
+def _lloyd(x: np.ndarray, k: int, rng: np.random.RandomState, iters: int) -> np.ndarray:
+    """Lloyd's k-means seeded by ``k`` distinct rng-chosen rows; a cell
+    that loses all members keeps its centroid."""
+    cents = x[rng.choice(len(x), size=min(k, len(x)), replace=False)]
+    for _ in range(iters):
+        assign = _nearest(x, cents)
+        for j in range(len(cents)):
+            members = x[assign == j]
+            if len(members):
+                cents[j] = members.mean(axis=0)
+    return cents
+
+
+def _pq_fit(x: np.ndarray, m: int, k: int, seed: int, iters: int) -> list[list[list[float]]]:
+    """One Lloyd fit per D/m-dim subspace, subspaces in order on one rng:
+    m × k × (D/m) nested lists."""
+    d = x.shape[1]
+    if d % m:
+        raise ValueError(f"dim {d} must divide evenly into {m} subspaces")
+    sub = d // m
+    rng = np.random.RandomState(seed)
+    return [_lloyd(x[:, j * sub : (j + 1) * sub], k, rng, iters).tolist() for j in range(m)]
+
+
+def _pq_encode(x: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """Per subspace j, the index of the nearest codebook centroid."""
+    n_sub, _, sub = books.shape
+    codes = np.empty((len(x), n_sub), dtype="int32")
+    for j in range(n_sub):
+        codes[:, j] = _nearest(x[:, j * sub : (j + 1) * sub], books[j])
+    return codes
+
+
+def _adc_table(u: np.ndarray, books: np.ndarray) -> list[float]:
+    """A query's flat ADC table: t[j*k + c] = u_j · books[j][c]."""
+    sub = books.shape[2]
+    return [
+        float(v)
+        for v in np.concatenate([u[j * sub : (j + 1) * sub] @ books[j].T for j in range(len(books))])
+    ]
+
+
+def _adc_fold(n_sub: int, n_cent: int) -> F.Column:
+    """Σ_j adc[j*k + codes_j] as a row-local JVM left fold."""
+    return F.aggregate(
+        F.sequence(F.lit(0), F.lit(n_sub - 1)),
+        F.lit(0.0),
+        lambda acc, j: acc
+        + F.element_at("adc", (j * n_cent + F.element_at("codes", j + 1) + 1).cast("int")),
     )
 
 
@@ -126,44 +233,17 @@ def train_ivf_centroids(
     iters: int = 10,
     id_col: str = "vec_id",
 ) -> list[list[float]]:
-    """Fit the IVF coarse quantizer: Lloyd's k-means on a bounded,
-    L2-normalized sample, driver-side in numpy.
+    """Fit the IVF coarse quantizer: Lloyd's k-means on the bounded
+    ``_unit_sample``, driver-side in numpy.
 
     A coarse quantizer needs only a sketch of the distribution, so the
     standard practice (FAISS does the same) is to train on a sample that
-    fits one machine: collect ≤ max_train vectors (≈50 MB at 100k×64),
-    iterate in vectorized numpy — no per-iteration cluster jobs. Index
-    build cost is O(max_train·n_cells·iters) regardless of corpus size.
-    Normalized vectors make euclidean cells align with cosine ranking.
-
-    The sample is the max_train LOWEST ids (TakeOrdered — a top-k heap, no
-    full sort materialization): a bare limit() on an unordered DataFrame
-    picks whatever partitions answer first, so centroids — and every
-    downstream cell assignment — would vary across runs and partition
-    layouts despite the fixed seed. Zero vectors are dropped before the
-    normalize divide (they carry no direction to cluster)."""
-    import numpy as np
-
-    sample = (
-        corpus.select(F.col(id_col).alias("i"), F.col("embedding").alias("e"))
-        .orderBy("i")
-        .limit(max_train)
-    )
-    x = np.array([r.e for r in sample.collect()], dtype="float64")
-    norms = np.linalg.norm(x, axis=1, keepdims=True)
-    x = x[norms[:, 0] > 0]
-    x /= norms[norms[:, 0] > 0].reshape(-1, 1)
-    rng = np.random.RandomState(seed)
-    cents = x[rng.choice(len(x), size=min(n_cells, len(x)), replace=False)]
-    for _ in range(iters):
-        # squared L2 via the expansion: argmin over cells of |c|² - 2c·v
-        d = (cents * cents).sum(axis=1)[None, :] - 2.0 * (x @ cents.T)
-        assign = d.argmin(axis=1)
-        for j in range(len(cents)):
-            members = x[assign == j]
-            if len(members):
-                cents[j] = members.mean(axis=0)
-    return [[float(v) for v in c] for c in cents]
+    fits one machine: ≤ max_train vectors (≈50 MB at 100k×64), iterated in
+    vectorized numpy with no per-iteration cluster jobs. Index build cost
+    is O(max_train·n_cells·iters) regardless of corpus size. Normalized
+    vectors make euclidean cells align with cosine ranking."""
+    x = _unit_sample(corpus, max_train, id_col)
+    return _lloyd(x, n_cells, np.random.RandomState(seed), iters).tolist()
 
 
 def ivf_topk(
@@ -185,62 +265,33 @@ def ivf_topk(
     matmul per Arrow batch. (Spark's higher-order array functions are
     interpreted, not codegen'd: an expression-tree argmin over 16 centroids
     measured ~10× slower than the matmul UDF.)"""
-    import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     if centroids is None:
         centroids = train_ivf_centroids(corpus, n_cells=n_cells)
     cents = np.array(centroids, dtype="float64")
-    cnorm2 = (cents * cents).sum(axis=1)
     n_probe = min(nprobe, len(centroids))
-
-    def _unit(vecs):
-        x = np.array(vecs.tolist(), dtype="float64")
-        n = np.linalg.norm(x, axis=1, keepdims=True)
-        n[n == 0] = 1.0  # zero vectors stay zero instead of NaN-ing the batch
-        return x / n
 
     @pandas_udf("int")
     def cell_of(vecs):
-        d = cnorm2[None, :] - 2.0 * (_unit(vecs) @ cents.T)
-        return pd.Series(d.argmin(axis=1).astype("int32"))
+        return pd.Series(_nearest(_unit(vecs.tolist()), cents).astype("int32"))
 
     @pandas_udf("array<int>")
     def probe_cells(vecs):
-        d = cnorm2[None, :] - 2.0 * (_unit(vecs) @ cents.T)
-        order = np.argsort(d, axis=1)[:, :n_probe].astype("int32")
-        return pd.Series(list(order))
+        d = _sqdist(_unit(vecs.tolist()), cents)
+        return pd.Series(list(np.argsort(d, axis=1)[:, :n_probe].astype("int32")))
 
-    c = with_norm(as_double_vec(corpus)).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("vec").alias("cvec"),
-        F.col("norm").alias("cnorm"),
-        cell_of(F.col("vec")).alias("cell"),
-    )
-    q = with_norm(as_double_vec(queries)).select(
-        F.col(id_col).alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("norm").alias("qnorm"),
-        F.explode(probe_cells(F.col("vec"))).alias("cell"),
-    )
-    scored = (
-        c.join(q, "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos", dot(F.col("qvec"), F.col("cvec")) / (F.col("qnorm") * F.col("cnorm")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 4).alias("score"))
-    )
+    c = _side(corpus, id_col, "neighbor_id", "c", cell_of(F.col("vec")).alias("cell"))
+    q = _side(queries, id_col, "query_id", "q", F.explode(probe_cells(F.col("vec"))).alias("cell"))
+    scored = c.join(q, "cell").filter(F.col("neighbor_id") != F.col("query_id"))
+    return _topk(scored.withColumn("cos", _cos()), "cos", k)
 
 
 # ADC-style query sets are collected driver-side (each query precomputes a
 # lookup table, so queries must be few by construction). Bound the collect so
 # an oversized query DataFrame fails loudly instead of OOMing the driver —
-# the same explicit-bound contract as train_ivf_centroids' max_train.
+# the same explicit-bound contract as the trainers' max_train.
 _MAX_ADC_QUERIES = 10_000
 
 
@@ -270,40 +321,10 @@ def train_pq_codebooks(
 ) -> list[list[list[float]]]:
     """Fit product-quantization codebooks: split the D-dim space into ``m``
     subspaces of D/m dims and run Lloyd's k-means (``k`` centroids) in each,
-    driver-side in numpy on a bounded, deterministically-chosen sample —
-    the same FAISS-style bounded-fit pattern as train_ivf_centroids, and
-    the same reproducibility rule (sample = lowest ids, fixed seed).
-    Vectors are L2-normalized first so ADC dot products rank like cosine.
-    Returns m × k × (D/m) nested lists."""
-    import numpy as np
-
-    sample = (
-        corpus.select(F.col(id_col).alias("i"), F.col("embedding").alias("e"))
-        .orderBy("i")
-        .limit(max_train)
-    )
-    x = np.array([r.e for r in sample.collect()], dtype="float64")
-    norms = np.linalg.norm(x, axis=1, keepdims=True)
-    x = x[norms[:, 0] > 0]
-    x /= norms[norms[:, 0] > 0].reshape(-1, 1)
-    d = x.shape[1]
-    if d % m:
-        raise ValueError(f"dim {d} must divide evenly into {m} subspaces")
-    sub = d // m
-    rng = np.random.RandomState(seed)
-    books = []
-    for j in range(m):
-        xs = x[:, j * sub : (j + 1) * sub]
-        cents = xs[rng.choice(len(xs), size=min(k, len(xs)), replace=False)]
-        for _ in range(iters):
-            dist = (cents * cents).sum(axis=1)[None, :] - 2.0 * (xs @ cents.T)
-            assign = dist.argmin(axis=1)
-            for c in range(len(cents)):
-                members = xs[assign == c]
-                if len(members):
-                    cents[c] = members.mean(axis=0)
-        books.append([[float(v) for v in c] for c in cents])
-    return books
+    driver-side in numpy on the same bounded ``_unit_sample`` as
+    train_ivf_centroids. Unit vectors make ADC dot products rank like
+    cosine. Returns m × k × (D/m) nested lists."""
+    return _pq_fit(_unit_sample(corpus, max_train, id_col), m, k, seed, iters)
 
 
 def pq_topk(
@@ -335,68 +356,28 @@ def pq_topk(
     re-reads only the top candidates). Approximate by construction →
     rows-only key; recall-vs-exact and reconstruction-error bounds are
     property-tested in tests/test_functions.py."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     if codebooks is None:
         codebooks = train_pq_codebooks(corpus, m=m, k=k, id_col=id_col)
     books = np.array(codebooks, dtype="float64")  # m × k × sub
-    n_sub, n_cent, sub = books.shape
-
-    def _unit(vecs):
-        x = np.array(vecs.tolist(), dtype="float64")
-        n = np.linalg.norm(x, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        return x / n
+    n_sub, n_cent, _ = books.shape
 
     @pandas_udf("array<int>")
     def encode(vecs):
-        x = _unit(vecs)
-        codes = np.empty((len(x), n_sub), dtype="int32")
-        for j in range(n_sub):
-            xs = x[:, j * sub : (j + 1) * sub]
-            cents = books[j]
-            dist = (cents * cents).sum(axis=1)[None, :] - 2.0 * (xs @ cents.T)
-            codes[:, j] = dist.argmin(axis=1)
-        return pd.Series(list(codes))
+        return pd.Series(list(_pq_encode(_unit(vecs.tolist()), books)))
 
-    # per-query flat ADC table: table[j*k + c] = q_sub_j · centroid_c
     q_rows = _bounded_query_rows(queries, id_col)
-    qx = _unit(pd.Series([r.embedding for r in q_rows]))
-    tables = []
-    for qi, r in enumerate(q_rows):
-        t = np.concatenate(
-            [qx[qi, j * sub : (j + 1) * sub] @ books[j].T for j in range(n_sub)]
-        )
-        tables.append((r[0], [float(v) for v in t]))
+    qx = _unit([r.embedding for r in q_rows])
+    tables = [(r[0], _adc_table(u, books)) for r, u in zip(q_rows, qx)]
     q = F.broadcast(
-        corpus.sparkSession.createDataFrame(
-            tables, f"query_id long, adc array<double>"
-        )
+        corpus.sparkSession.createDataFrame(tables, "query_id long, adc array<double>")
     )
 
     enc = corpus.select(F.col(id_col).alias("neighbor_id"), encode("embedding").alias("codes"))
-    scored = (
-        enc.join(q, F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "score_raw",
-            F.aggregate(
-                F.sequence(F.lit(0), F.lit(n_sub - 1)),
-                F.lit(0.0),
-                lambda acc, j: acc
-                + F.element_at(
-                    "adc", (j * n_cent + F.element_at("codes", j + 1) + 1).cast("int")
-                ),
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score_raw").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= topk)
-        .select("query_id", "neighbor_id", "rank", F.round("score_raw", 4).alias("score"))
-    )
+    scored = enc.join(q, F.col("neighbor_id") != F.col("query_id"))
+    return _topk(scored.withColumn("score_raw", _adc_fold(n_sub, n_cent)), "score_raw", topk)
 
 
 def train_ivfpq_index(
@@ -414,47 +395,14 @@ def train_ivfpq_index(
     RESIDUALS (unit vector − assigned centroid) — residuals are what the
     codes must reconstruct once the coarse cell has absorbed the vector's
     rough position, and quantizing them is what lets an m-byte code stay
-    accurate at 100 TB corpus scale. Same bounded-sample / fixed-seed /
-    lowest-ids reproducibility contract as train_ivf_centroids.
-    Returns (centroids n_cells × D, codebooks m × k × D/m)."""
-    import numpy as np
-
-    centroids = train_ivf_centroids(
-        corpus, n_cells=n_cells, seed=seed, max_train=max_train,
-        iters=iters, id_col=id_col,
-    )
-    cents = np.array(centroids, dtype="float64")
-
-    sample = (
-        corpus.select(F.col(id_col).alias("i"), F.col("embedding").alias("e"))
-        .orderBy("i")
-        .limit(max_train)
-    )
-    x = np.array([r.e for r in sample.collect()], dtype="float64")
-    norms = np.linalg.norm(x, axis=1, keepdims=True)
-    x = x[norms[:, 0] > 0]
-    x /= norms[norms[:, 0] > 0].reshape(-1, 1)
-    d = x.shape[1]
-    if d % m:
-        raise ValueError(f"dim {d} must divide evenly into {m} subspaces")
-    sub = d // m
-    # residuals w.r.t. each vector's assigned cell
-    dist = (cents * cents).sum(axis=1)[None, :] - 2.0 * (x @ cents.T)
-    resid = x - cents[dist.argmin(axis=1)]
-    rng = np.random.RandomState(seed)
-    books = []
-    for j in range(m):
-        xs = resid[:, j * sub : (j + 1) * sub]
-        bk = xs[rng.choice(len(xs), size=min(k, len(xs)), replace=False)]
-        for _ in range(iters):
-            dd = (bk * bk).sum(axis=1)[None, :] - 2.0 * (xs @ bk.T)
-            assign = dd.argmin(axis=1)
-            for c in range(len(bk)):
-                members = xs[assign == c]
-                if len(members):
-                    bk[c] = members.mean(axis=0)
-        books.append([[float(v) for v in c] for c in bk])
-    return centroids, books
+    accurate at 100 TB corpus scale. Both fits read one ``_unit_sample``
+    (one job) and each seeds its own rng with ``seed``, so the centroids
+    equal train_ivf_centroids' and the codebooks equal train_pq_codebooks'
+    on the residuals. Returns (centroids n_cells × D, codebooks m × k × D/m)."""
+    x = _unit_sample(corpus, max_train, id_col)
+    cents = _lloyd(x, n_cells, np.random.RandomState(seed), iters)
+    resid = x - cents[_nearest(x, cents)]
+    return cents.tolist(), _pq_fit(resid, m, k, seed, iters)
 
 
 def ivfpq_topk(
@@ -470,9 +418,9 @@ def ivfpq_topk(
     index: tuple[list[list[float]], list[list[list[float]]]] | None = None,
 ) -> DataFrame:
     """Composed IVF+PQ approximate cosine top-k — the production 100 TB ANN
-    shape (VERDICT r06 #4; FAISS IndexIVFPQ): IVF cell pruning decides WHICH
-    vectors a query even looks at, PQ/ADC decides how cheaply each candidate
-    is scored. Neither half alone survives 100 TB: plain IVF still ships
+    shape (FAISS IndexIVFPQ): IVF cell pruning decides WHICH vectors a
+    query even looks at, PQ/ADC decides how cheaply each candidate is
+    scored. Neither half alone survives 100 TB: plain IVF still ships
     full float vectors through the probe join; plain PQ still scans every
     code. Composed, the scan ships (cell int + m bytes) per vector and each
     query touches ~nprobe/n_cells of them.
@@ -502,57 +450,32 @@ def ivfpq_topk(
     Approximate by construction → rows-only key; the ADC decomposition
     exactness, cell-pruning containment, and recall-vs-IVF floor are
     property-tested in tests/test_functions.py."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     if index is None:
-        index = train_ivfpq_index(
-            corpus, n_cells=n_cells, m=m, k=k, id_col=id_col
-        )
+        index = train_ivfpq_index(corpus, n_cells=n_cells, m=m, k=k, id_col=id_col)
     centroids, codebooks = index
     cents = np.array(centroids, dtype="float64")
-    cnorm2 = (cents * cents).sum(axis=1)
     books = np.array(codebooks, dtype="float64")  # m × k × sub
-    n_sub, n_cent, sub = books.shape
+    n_sub, n_cent, _ = books.shape
     n_probe = min(nprobe, len(centroids))
-
-    def _unit(vecs):
-        x = np.array(vecs.tolist(), dtype="float64")
-        n = np.linalg.norm(x, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        return x / n
 
     @pandas_udf("struct<cell: int, codes: array<int>>")
     def encode(vecs):
-        x = _unit(vecs)
-        d = cnorm2[None, :] - 2.0 * (x @ cents.T)
-        cell = d.argmin(axis=1)
-        resid = x - cents[cell]
-        codes = np.empty((len(x), n_sub), dtype="int32")
-        for j in range(n_sub):
-            xs = resid[:, j * sub : (j + 1) * sub]
-            bk = books[j]
-            dist = (bk * bk).sum(axis=1)[None, :] - 2.0 * (xs @ bk.T)
-            codes[:, j] = dist.argmin(axis=1)
-        return pd.DataFrame(
-            {"cell": cell.astype("int32"), "codes": list(codes)}
-        )
+        x = _unit(vecs.tolist())
+        cell = _nearest(x, cents)
+        codes = _pq_encode(x - cents[cell], books)
+        return pd.DataFrame({"cell": cell.astype("int32"), "codes": list(codes)})
 
     # query side: nprobe rows per query — (query_id, cell, bias, adc)
     q_rows = _bounded_query_rows(queries, id_col)
-    qx = _unit(pd.Series([r.embedding for r in q_rows]))
-    qd = cnorm2[None, :] - 2.0 * (qx @ cents.T)
-    probe = np.argsort(qd, axis=1)[:, :n_probe]
+    qx = _unit([r.embedding for r in q_rows])
+    probe = np.argsort(_sqdist(qx, cents), axis=1)[:, :n_probe]
     probe_rows = []
-    for qi, r in enumerate(q_rows):
-        adc = np.concatenate(
-            [qx[qi, j * sub : (j + 1) * sub] @ books[j].T for j in range(n_sub)]
-        )
-        adc_l = [float(v) for v in adc]
-        for cell in probe[qi]:
-            bias = float(qx[qi] @ cents[cell])
-            probe_rows.append((r[0], int(cell), bias, adc_l))
+    for r, u, cells in zip(q_rows, qx, probe):
+        adc = _adc_table(u, books)
+        probe_rows += [(r[0], int(c), float(u @ cents[c]), adc) for c in cells]
     q = F.broadcast(
         corpus.sparkSession.createDataFrame(
             probe_rows, "query_id long, cell int, bias double, adc array<double>"
@@ -565,56 +488,21 @@ def ivfpq_topk(
     scored = (
         enc.join(q, "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "score_raw",
-            F.col("bias")
-            + F.aggregate(
-                F.sequence(F.lit(0), F.lit(n_sub - 1)),
-                F.lit(0.0),
-                lambda acc, j: acc
-                + F.element_at(
-                    "adc", (j * n_cent + F.element_at("codes", j + 1) + 1).cast("int")
-                ),
-            ),
-        )
+        .withColumn("score_raw", F.col("bias") + _adc_fold(n_sub, n_cent))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score_raw").desc(), F.col("neighbor_id"))
     if not refine:
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= topk)
-            .select("query_id", "neighbor_id", "rank", F.round("score_raw", 4).alias("score"))
-        )
+        return _topk(scored, "score_raw", topk)
 
     shortlist = (
-        scored.withColumn("adc_rank", F.row_number().over(w))
+        scored.withColumn("adc_rank", _rank("score_raw"))
         .filter(F.col("adc_rank") <= refine * topk)
         .select("query_id", "neighbor_id")
     )
     # exact re-rank: full vectors only for the shortlist survivors
-    c = with_norm(as_double_vec(corpus)).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("vec").alias("cvec"),
-        F.col("norm").alias("cnorm"),
-    )
-    qv = F.broadcast(
-        with_norm(as_double_vec(queries)).select(
-            F.col(id_col).alias("query_id"),
-            F.col("vec").alias("qvec"),
-            F.col("norm").alias("qnorm"),
-        )
-    )
-    refined = (
-        shortlist.join(c, "neighbor_id")
-        .join(qv, "query_id")
-        .withColumn("cos", dot(F.col("qvec"), F.col("cvec")) / (F.col("qnorm") * F.col("cnorm")))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        refined.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= topk)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 4).alias("score"))
-    )
+    c = _side(corpus, id_col, "neighbor_id", "c")
+    q = F.broadcast(_side(queries, id_col, "query_id", "q"))
+    refined = shortlist.join(c, "neighbor_id").join(q, "query_id")
+    return _topk(refined.withColumn("cos", _cos()), "cos", topk)
 
 
 def cosine_near_dup_pairs(
@@ -628,12 +516,12 @@ def cosine_near_dup_pairs(
     v = with_norm(as_double_vec(corpus)).select(
         id_col, block_col, F.col("vec"), F.col("norm")
     )
-    # r17 (guide §2.5): the probe side of the broadcast self-join inherits
-    # the parquet scan's split count (a handful of row groups), so the
-    # CPU-bound within-block dot products ran ~4-wide on 32 cores — AQE
-    # can't help because the stage is tiny in BYTES. spread() the probe
-    # side only (the build side broadcasts either way); row-local compute
-    # + equi-join, so the pair set is unchanged.
+    # the probe side of the broadcast self-join inherits the parquet
+    # scan's split count (a handful of row groups), so the CPU-bound
+    # within-block dot products ran ~4-wide on 32 cores — AQE can't help
+    # because the stage is tiny in BYTES. spread() the probe side only
+    # (the build side broadcasts either way); row-local compute +
+    # equi-join, so the pair set is unchanged.
     from unfccc_documents_database_sandbox_spark.catalog import spread
 
     a, b = spread(v).alias("a"), v.alias("b")

@@ -1,11 +1,22 @@
-"""Similarity-search queries (north star L3) over the embeddings table."""
+"""Similarity-search queries (north star L3) over the embeddings table.
+
+The ANN keys call the operators in ``operators/similarity.py``. Their
+oracle-exact twins (``*_portable``, ``sim_index_*``, ``dedup_semantic``)
+restate the same pipelines as Column fold arithmetic over pinned literal
+indexes, so a DuckDB query replays them bit for bit. The twins share one
+unit frame (``_units``), one first-min argmin (``_argmin``), one squared
+distance (``_sqdist``), one literal-codebook PQ encode (``_pq_dists``), one
+ADC sum (``_adc_sum``) and the operators' top-k tail (``S._topk``).
+"""
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from unfccc_documents_database_sandbox_spark.catalog import load_table, pin
+from unfccc_documents_database_sandbox_spark.catalog import load_table, pin, spread
 from unfccc_documents_database_sandbox_spark.functions.vectors import (
     dot as vec_dot,
 )
@@ -13,6 +24,16 @@ from unfccc_documents_database_sandbox_spark.functions.vectors import (
     to_double as vec_to_double,
 )
 from unfccc_documents_database_sandbox_spark.operators import similarity as S
+from unfccc_documents_database_sandbox_spark.plans.ivf_centroids import (
+    IVF_CELLS, cell, cell_sq,
+)
+from unfccc_documents_database_sandbox_spark.plans.ivfpq_codebook import (
+    IVFPQ_C, IVFPQ_CB, IVFPQ_CENT, IVFPQ_D, IVFPQ_K, IVFPQ_M,
+    IVFPQ_NPROBE, IVFPQ_REFINE, IVFPQ_SUB,
+)
+from unfccc_documents_database_sandbox_spark.plans.pq_codebook import (
+    PQ_CB, PQ_K, PQ_M, PQ_SUB,
+)
 from unfccc_documents_database_sandbox_spark.registry import register
 
 _COSINE_CTE = """
@@ -63,11 +84,20 @@ def sim_topk_lsh(spark, sf_dir):
     return S.lsh_bucket_topk(emb, queries, k=5)
 
 
-# one-time-per-(session, sf_dir) quantizer fit — the index build is the
-# expensive bounded-sample collect; repeated sim_topk_ivf calls (driver
-# sweep, bench loop, parity suite) reuse the centroids like a real ANN
-# system reuses its index.
-_IVF_CENTROIDS: dict[tuple[object, str], list[list[float]]] = {}
+# One trained index per (application id, sf_dir, kind): the fit is the
+# expensive bounded-sample collect, so repeated builds of the ANN keys
+# (registry sweeps, bench loops, the parity suite) reuse it like a real
+# ANN system reuses its index. The key holds the application id, not the
+# session, so a stopped session is not kept alive by the memo.
+_INDEX: dict[tuple[str, str, str], object] = {}
+
+
+def _trained(spark, sf_dir: str, kind: str, train):
+    """The memoized ``train()`` result for this application and sf_dir."""
+    key = (spark.sparkContext.applicationId, sf_dir, kind)
+    if key not in _INDEX:
+        _INDEX[key] = train()
+    return _INDEX[key]
 
 
 def _lsh_portable_oracle(n_planes: int = 8, dim: int = 64, k: int = 5) -> str:
@@ -78,15 +108,11 @@ def _lsh_portable_oracle(n_planes: int = 8, dim: int = 64, k: int = 5) -> str:
     (integer-valued doubles: every product and the fold order are
     identical across engines), and the per-bucket cosine rank reuses the
     sim_topk-proven list_dot_product ≡ left-fold equivalence."""
-    from unfccc_documents_database_sandbox_spark.operators.similarity import (
-        _hyperplane,
-    )
-
     def lit(p):
         return "[" + ", ".join(repr(v) for v in p) + "]"
 
     bucket = " + ".join(
-        f"(CASE WHEN list_dot_product(vec, {lit(_hyperplane(j, dim))}) >= 0"
+        f"(CASE WHEN list_dot_product(vec, {lit(S._hyperplane(j, dim))}) >= 0"
         f" THEN {1 << j} ELSE 0 END)"
         for j in range(n_planes)
     )
@@ -119,7 +145,7 @@ def _lsh_portable_oracle(n_planes: int = 8, dim: int = 64, k: int = 5) -> str:
 
 @register("sim_topk_lsh_portable", oracle=_lsh_portable_oracle())
 def sim_topk_lsh_portable(spark, sf_dir):
-    """The ORACLE-EXACT twin of sim_topk_lsh (VERDICT r14 #4): the
+    """The ORACLE-EXACT twin of sim_topk_lsh: the
     production operator runs UNCHANGED — its hyperplane matrix was
     always deterministic integer-valued doubles, its bucket a sign-bit
     sum, its in-bucket rank an exact cosine — so unlike the PQ/IVFPQ
@@ -132,11 +158,7 @@ def sim_topk_lsh_portable(spark, sf_dir):
     Scale: one equi-join shuffle on bucket id — the 100 TB ANN path
     where broadcasting the corpus is impossible; bucket fan-out is
     bounded by 2^n_planes."""
-    from unfccc_documents_database_sandbox_spark.operators import similarity as S
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    return S.lsh_bucket_topk(emb, queries, k=5)
+    return sim_topk_lsh(spark, sf_dir)
 
 
 @register("sim_topk_ivf", oracle=None, tags=("rows-only",))
@@ -147,17 +169,12 @@ def sim_topk_ivf(spark, sf_dir):
     Approximate recall by construction → rows-only check; exactness when
     nprobe = n_cells is asserted in tests/test_parity.py."""
     emb = load_table(spark, sf_dir, "embeddings")
-    key = (spark, sf_dir)
-    if key not in _IVF_CENTROIDS:
-        _IVF_CENTROIDS[key] = S.train_ivf_centroids(emb, n_cells=16)
+    centroids = _trained(
+        spark, sf_dir, "ivf", lambda: S.train_ivf_centroids(emb, n_cells=16))
     queries = emb.filter(F.col("vec_id") < 5)
     return S.ivf_topk(
-        emb, queries, k=5, n_cells=16, nprobe=4, centroids=_IVF_CENTROIDS[key]
+        emb, queries, k=5, n_cells=16, nprobe=4, centroids=centroids
     )
-
-
-# one-time-per-(session, sf_dir) codebook fit, same reuse pattern as IVF
-_PQ_CODEBOOKS: dict[tuple[object, str], list[list[list[float]]]] = {}
 
 
 @register("sim_topk_pq", oracle=None, tags=("rows-only",))
@@ -170,20 +187,15 @@ def sim_topk_pq(spark, sf_dir):
     recall-vs-exact and reconstruction-error bounds are property-tested
     in tests/test_functions.py."""
     emb = load_table(spark, sf_dir, "embeddings")
-    key = (spark, sf_dir)
-    if key not in _PQ_CODEBOOKS:
-        _PQ_CODEBOOKS[key] = S.train_pq_codebooks(emb, m=8, k=16)
+    books = _trained(
+        spark, sf_dir, "pq", lambda: S.train_pq_codebooks(emb, m=8, k=16))
     queries = emb.filter(F.col("vec_id") < 5)
-    return S.pq_topk(emb, queries, topk=5, m=8, k=16, codebooks=_PQ_CODEBOOKS[key])
-
-
-# one-time-per-(session, sf_dir) composed-index fit, same reuse pattern
-_IVFPQ_INDEX: dict[tuple[object, str], tuple] = {}
+    return S.pq_topk(emb, queries, topk=5, m=8, k=16, codebooks=books)
 
 
 @register("sim_topk_ivfpq", oracle=None, tags=("rows-only",))
 def sim_topk_ivfpq(spark, sf_dir):
-    """L3 composed IVF+PQ ANN (VERDICT r06 #4) — the shape a production
+    """L3 composed IVF+PQ ANN — the shape a production
     100 TB vector search actually runs (FAISS IndexIVFPQ / IVFADC): IVF
     cell probing prunes WHICH candidates a query scores (nprobe/n_cells of
     the corpus), PQ/ADC over residual byte codes prunes WHAT the scan ships
@@ -195,14 +207,68 @@ def sim_topk_ivfpq(spark, sf_dir):
     vs plain IVF at equal nprobe are property-tested in
     tests/test_functions.py::test_ivfpq_composes_cell_pruning_with_adc."""
     emb = load_table(spark, sf_dir, "embeddings")
-    key = (spark, sf_dir)
-    if key not in _IVFPQ_INDEX:
-        _IVFPQ_INDEX[key] = S.train_ivfpq_index(emb, n_cells=16, m=8, k=16)
+    index = _trained(
+        spark, sf_dir, "ivfpq",
+        lambda: S.train_ivfpq_index(emb, n_cells=16, m=8, k=16))
     queries = emb.filter(F.col("vec_id") < 5)
     return S.ivfpq_topk(
-        emb, queries, topk=5, n_cells=16, nprobe=4, m=8, k=16,
-        index=_IVFPQ_INDEX[key],
+        emb, queries, topk=5, n_cells=16, nprobe=4, m=8, k=16, index=index,
     )
+
+
+# --- Column kernels of the oracle-exact twins: each is the fold
+# arithmetic its DuckDB oracle replays term for term. ---
+
+def _units(emb):
+    """(vec_id, embedding) → (vec_id, u): the unit-normalized double vector
+    u = vec / sqrt(dot(vec, vec)) that every oracle-exact stage consumes."""
+    v = emb.select(
+        "vec_id", vec_to_double(F.col("embedding")).alias("vec")
+    ).withColumn("nrm", F.sqrt(vec_dot(F.col("vec"), F.col("vec"))))
+    return v.select(
+        "vec_id",
+        F.transform("vec", lambda x: x / F.col("nrm")).alias("u"),
+    )
+
+
+def _argmin(dl) -> F.Column:
+    """0-based index of the FIRST minimum of an array column: the same
+    tie-break as DuckDB's list_position(dl, list_min(dl)) - 1."""
+    return F.array_position(dl, F.array_min(dl)) - 1
+
+
+def _sqdist(x, c) -> F.Column:
+    """c·c − 2·(x·c): squared L2 up to the row-constant x·x, dropped."""
+    return vec_dot(c, c) - F.lit(2.0) * vec_dot(x, c)
+
+
+def _pq_dists(x: str, cb_v, m: int, k: int, sub: int) -> list[F.Column]:
+    """Per subspace j, the array of ``_sqdist`` from the j-th slice of
+    ``x`` to each of the k centroids of the flat literal codebook ``cb_v``
+    (centroid (j, c) is cb_v[(j*k + c)*sub :][:sub])."""
+
+    def cent(j: int, c: int) -> F.Column:
+        s = (j * k + c) * sub
+        return F.lit(cb_v[s : s + sub])
+
+    return [
+        F.array(*[_sqdist(F.slice(x, j * sub + 1, sub), cent(j, c)) for c in range(k)])
+        for j in range(m)
+    ]
+
+
+def _adc_sum(cb_v, m: int, k: int, sub: int, *head) -> F.Column:
+    """head + Σ_j qu_j · centroid(j, codes_j) as one explicit
+    left-associated sum (no unordered SUM), so DuckDB adds in the same
+    order."""
+
+    def term(j: int) -> F.Column:
+        start = (F.lit(j * k) + F.element_at("codes", j + 1)) * sub + 1
+        return vec_dot(
+            F.slice("qu", j * sub + 1, sub), F.slice(F.lit(cb_v), start, sub)
+        )
+
+    return reduce(lambda a, b: a + b, [*head, *(term(j) for j in range(m))])
 
 
 def _pq_portable_oracle() -> str:
@@ -210,10 +276,6 @@ def _pq_portable_oracle() -> str:
     same fold orders (list_dot_product ≡ the Spark zip_with/aggregate left
     fold, the sim_topk-proven pattern), same first-index argmin idiom
     (list_position(dl, list_min(dl)) ≡ array_position(dl, array_min(dl)))."""
-    from unfccc_documents_database_sandbox_spark.plans.pq_codebook import (
-        PQ_CB, PQ_K, PQ_M, PQ_SUB,
-    )
-
     fc_lit = "[" + ", ".join(repr(v) for v in PQ_CB) + "]"
 
     def dl(j: int) -> str:
@@ -273,7 +335,7 @@ def _pq_portable_oracle() -> str:
 
 @register("sim_topk_pq_portable", oracle=_pq_portable_oracle())
 def sim_topk_pq_portable(spark, sf_dir):
-    """The ORACLE-EXACT twin of sim_topk_pq (VERDICT r05 #3): the same
+    """The ORACLE-EXACT twin of sim_topk_pq: the same
     encode-to-codes + ADC-lookup-sum pipeline, but with the codebook pinned
     as shared decimal literals (plans/pq_codebook.py — trained once,
     inlined; the dedup_minhash_portable fixed-parameter split) and every
@@ -296,46 +358,14 @@ def sim_topk_pq_portable(spark, sf_dir):
     code array (m bytes/vector) is still the only per-row state the scan
     carries. k=8 (vs production 16) keeps the inline codebook compact; the
     pipeline shape is parameter-identical."""
-    from functools import reduce
-
-    from unfccc_documents_database_sandbox_spark.plans.pq_codebook import (
-        PQ_CB, PQ_K, PQ_M, PQ_SUB,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select(
-        "vec_id", vec_to_double(F.col("embedding")).alias("vec")
-    ).withColumn("nrm", F.sqrt(vec_dot(F.col("vec"), F.col("vec"))))
-    un = v.select(
-        "vec_id",
-        F.transform("vec", lambda x: x / F.col("nrm")).alias("u"),
-    )
-
-    def cent(j: int, c: int) -> F.Column:
-        s = (j * PQ_K + c) * PQ_SUB
-        return F.lit(PQ_CB[s : s + PQ_SUB])
-
-    def dl(j: int) -> F.Column:
-        xs = F.slice("u", j * PQ_SUB + 1, PQ_SUB)
-        return F.array(
-            *[
-                vec_dot(cent(j, c), cent(j, c))
-                - F.lit(2.0) * vec_dot(xs, cent(j, c))
-                for c in range(PQ_K)
-            ]
-        )
-
+    un = _units(load_table(spark, sf_dir, "embeddings"))
+    dls = _pq_dists("u", PQ_CB, PQ_M, PQ_K, PQ_SUB)
     with_dl = un.select(
-        "vec_id", "u", *[dl(j).alias(f"dl{j}") for j in range(PQ_M)]
+        "vec_id", "u", *[d.alias(f"dl{j}") for j, d in enumerate(dls)]
     )
     enc = with_dl.select(
         "vec_id",
-        F.array(
-            *[
-                F.array_position(f"dl{j}", F.array_min(f"dl{j}")) - 1
-                for j in range(PQ_M)
-            ]
-        ).alias("codes"),
+        F.array(*[_argmin(f"dl{j}") for j in range(PQ_M)]).alias("codes"),
     )
 
     q = F.broadcast(
@@ -346,31 +376,10 @@ def sim_topk_pq_portable(spark, sf_dir):
     joined = enc.select(F.col("vec_id").alias("neighbor_id"), "codes").join(
         q, F.col("neighbor_id") != F.col("query_id")
     )
-
-    def adc_term(j: int) -> F.Column:
-        start = (F.lit(j * PQ_K) + F.element_at("codes", j + 1)) * PQ_SUB + 1
-        return vec_dot(
-            F.slice("qu", j * PQ_SUB + 1, PQ_SUB),
-            F.slice(F.lit(PQ_CB), start, PQ_SUB),
-        )
-
     scored = joined.withColumn(
-        "score_raw",
-        reduce(lambda a, b: a + b, [adc_term(j) for j in range(PQ_M)]),
+        "score_raw", _adc_sum(PQ_CB, PQ_M, PQ_K, PQ_SUB)
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("score_raw").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            F.round("score_raw", 4).alias("score"),
-        )
-    )
+    return S._topk(scored, "score_raw", 5)
 
 
 # Planted near-dups (VERDICT r13 #7): the corpus embeddings are uniform
@@ -504,11 +513,6 @@ def _ivfpq_portable_oracle(where: str = "TRUE") -> str:
     explicit left-associated bias + ADC sum, same ROW_NUMBER tie-breaks.
     ``where`` restricts the corpus (the sim_index_persisted per-version
     twin runs it once per snapshot)."""
-    from unfccc_documents_database_sandbox_spark.plans.ivfpq_codebook import (
-        IVFPQ_C, IVFPQ_CB, IVFPQ_CENT, IVFPQ_D, IVFPQ_K, IVFPQ_M,
-        IVFPQ_NPROBE, IVFPQ_REFINE, IVFPQ_SUB,
-    )
-
     ce_lit = "[" + ", ".join(repr(v) for v in IVFPQ_CENT) + "]"
     fc_lit = "[" + ", ".join(repr(v) for v in IVFPQ_CB) + "]"
 
@@ -616,7 +620,7 @@ def _ivfpq_portable_oracle(where: str = "TRUE") -> str:
 
 @register("sim_topk_ivfpq_portable", oracle=_ivfpq_portable_oracle())
 def sim_topk_ivfpq_portable(spark, sf_dir):
-    """The ORACLE-EXACT twin of sim_topk_ivfpq (VERDICT r07 #4): the full
+    """The ORACLE-EXACT twin of sim_topk_ivfpq: the full
     IVFADC composition — coarse cell assignment, residual PQ encode, cell
     probing, bias + ADC scoring, exact refine — with the index pinned as
     shared decimal literals (plans/ivfpq_codebook.py, trained once on
@@ -643,90 +647,33 @@ def sim_topk_ivfpq_portable(spark, sf_dir):
     queries/probes broadcast, and the shortlist join touches
     O(|Q|·refine·topk) rows. C=4/k=8 (vs production 16/16) keeps the
     inline literals compact; the pipeline shape is parameter-identical."""
-    from functools import reduce
-
-    from unfccc_documents_database_sandbox_spark.plans.ivfpq_codebook import (
-        IVFPQ_C, IVFPQ_CB, IVFPQ_CENT, IVFPQ_D, IVFPQ_K, IVFPQ_M,
-        IVFPQ_NPROBE, IVFPQ_REFINE, IVFPQ_SUB,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     return _ivfpq_portable_plan(spark, emb)
 
 
-def _ivfpq_unit(emb):
-    """(vec_id, embedding) → (vec_id, u): the unit-normalized double
-    vector every portable IVFADC stage consumes."""
-    v = emb.select(
-        "vec_id", vec_to_double(F.col("embedding")).alias("vec")
-    ).withColumn("nrm", F.sqrt(vec_dot(F.col("vec"), F.col("vec"))))
-    return v.select(
-        "vec_id",
-        F.transform("vec", lambda x: x / F.col("nrm")).alias("u"),
-    )
-
-
-def _ivfpq_ce(cent_v):
-    """(ce, cell_dist) closures over a coarse-centroid flat list."""
-    from unfccc_documents_database_sandbox_spark.plans.ivfpq_codebook import (
-        IVFPQ_D,
-    )
-
-    def ce(c) -> F.Column:
-        if isinstance(c, int):
-            return F.lit(cent_v[c * IVFPQ_D : (c + 1) * IVFPQ_D])
-        return F.slice(F.lit(cent_v), c * IVFPQ_D + 1, IVFPQ_D)
-
-    def cell_dist(u_col, c: int) -> F.Column:
-        return vec_dot(ce(c), ce(c)) - F.lit(2.0) * vec_dot(u_col, ce(c))
-
-    return ce, cell_dist
+def _centroid(cent_v, c: int) -> F.Column:
+    """Coarse centroid c of a flat IVFADC centroid list, as a literal."""
+    return F.lit(cent_v[c * IVFPQ_D : (c + 1) * IVFPQ_D])
 
 
 def _ivfpq_encode_plan(un, cent_v, cb_v):
     """The portable IVFADC ENCODE stage alone: (vec_id, u) → (vec_id,
     cell, codes) under the passed quantizer — cell = first-index argmin
     coarse distance, codes = per-subspace residual argmin (the exact
-    arithmetic the DuckDB twin replays). Split out (r15) so the
-    incremental index refresh can run it over ONLY the change feed's
-    inserted rows."""
-    from unfccc_documents_database_sandbox_spark.plans.ivfpq_codebook import (
-        IVFPQ_C, IVFPQ_K, IVFPQ_M, IVFPQ_SUB,
+    arithmetic the DuckDB twin replays). Split out so the incremental
+    index refresh can run it over ONLY the change feed's inserted rows."""
+    cdl = F.array(
+        *[_sqdist(F.col("u"), _centroid(cent_v, c)) for c in range(IVFPQ_C)]
     )
-
-    ce, cell_dist = _ivfpq_ce(cent_v)
-    cdl = F.array(*[cell_dist(F.col("u"), c) for c in range(IVFPQ_C)])
-    assigned = un.select(
-        "vec_id", "u",
-        (F.array_position(cdl, F.array_min(cdl)) - 1).alias("cell"),
-    )
+    assigned = un.select("vec_id", "u", _argmin(cdl).alias("cell"))
+    # r = u − centroid(cell), the centroid sliced out of one literal
+    cent = F.slice(F.lit(cent_v), F.col("cell") * IVFPQ_D + 1, IVFPQ_D)
     resid = assigned.select(
-        "vec_id", "cell",
-        F.zip_with("u", ce(F.col("cell")), lambda a, b: a - b).alias("r"),
+        "vec_id", "cell", F.zip_with("u", cent, lambda a, b: a - b).alias("r"),
     )
-
-    def cb(j: int, c: int) -> F.Column:
-        s = (j * IVFPQ_K + c) * IVFPQ_SUB
-        return F.lit(cb_v[s : s + IVFPQ_SUB])
-
-    def dl(j: int) -> F.Column:
-        xs = F.slice("r", j * IVFPQ_SUB + 1, IVFPQ_SUB)
-        return F.array(
-            *[
-                vec_dot(cb(j, c), cb(j, c))
-                - F.lit(2.0) * vec_dot(xs, cb(j, c))
-                for c in range(IVFPQ_K)
-            ]
-        )
-
+    dls = _pq_dists("r", cb_v, IVFPQ_M, IVFPQ_K, IVFPQ_SUB)
     return resid.select(
-        "vec_id", "cell",
-        F.array(
-            *[
-                F.array_position(dl(j), F.array_min(dl(j))) - 1
-                for j in range(IVFPQ_M)
-            ]
-        ).alias("codes"),
+        "vec_id", "cell", F.array(*[_argmin(d) for d in dls]).alias("codes"),
     )
 
 
@@ -735,21 +682,13 @@ def _ivfpq_portable_plan(spark, emb, cent_v=None, cb_v=None, enc_df=None):
     corpus, with the index passable as data (``cent_v``/``cb_v`` default
     to the pinned module literals) — shared by sim_topk_ivfpq_portable
     (module-literal index), sim_index_persisted (index retrieved from
-    snapshot-table metadata, VERDICT r09 #4), and sim_index_refresh
-    (``enc_df``: PRE-ENCODED (vec_id, cell, codes) rows from the
-    persisted artifact replace the inline encode stage — the serve path
-    of an incrementally maintained index, VERDICT r14 #5)."""
-    from functools import reduce
-
-    from unfccc_documents_database_sandbox_spark.plans.ivfpq_codebook import (
-        IVFPQ_C, IVFPQ_CB, IVFPQ_CENT, IVFPQ_K, IVFPQ_M,
-        IVFPQ_NPROBE, IVFPQ_REFINE, IVFPQ_SUB,
-    )
-
+    snapshot-table metadata), and sim_index_refresh (``enc_df``:
+    PRE-ENCODED (vec_id, cell, codes) rows from the persisted artifact
+    replace the inline encode stage — the serve path of an incrementally
+    maintained index)."""
     cent_v = IVFPQ_CENT if cent_v is None else cent_v
     cb_v = IVFPQ_CB if cb_v is None else cb_v
-    un = _ivfpq_unit(emb)
-    ce, cell_dist = _ivfpq_ce(cent_v)
+    un = _units(emb)
     enc = (enc_df if enc_df is not None
            else _ivfpq_encode_plan(un, cent_v, cb_v))
 
@@ -763,8 +702,8 @@ def _ivfpq_portable_plan(spark, emb, cent_v=None, cb_v=None, enc_df=None):
                 *[
                     F.struct(
                         F.lit(c).cast("long").alias("cell"),
-                        cell_dist(F.col("qu"), c).alias("cdist"),
-                        vec_dot(F.col("qu"), ce(c)).alias("bias"),
+                        _sqdist(F.col("qu"), _centroid(cent_v, c)).alias("cdist"),
+                        vec_dot(F.col("qu"), _centroid(cent_v, c)).alias("bias"),
                     )
                     for c in range(IVFPQ_C)
                 ]
@@ -787,43 +726,19 @@ def _ivfpq_portable_plan(spark, emb, cent_v=None, cb_v=None, enc_df=None):
         (F.col("ecell") == F.col("pcell"))
         & (F.col("neighbor_id") != F.col("query_id")),
     ).drop("ecell", "pcell")
-
-    def adc_term(j: int) -> F.Column:
-        start = (F.lit(j * IVFPQ_K) + F.element_at("codes", j + 1)) * IVFPQ_SUB + 1
-        return vec_dot(
-            F.slice("qu", j * IVFPQ_SUB + 1, IVFPQ_SUB),
-            F.slice(F.lit(cb_v), start, IVFPQ_SUB),
-        )
-
     scored = joined.withColumn(
         "adc_score",
-        reduce(
-            lambda a, b: a + b,
-            [F.col("bias")] + [adc_term(j) for j in range(IVFPQ_M)],
-        ),
-    )
-    ws = W.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id")
+        _adc_sum(cb_v, IVFPQ_M, IVFPQ_K, IVFPQ_SUB, F.col("bias")),
     )
     shortlist = (
-        scored.withColumn("srn", F.row_number().over(ws))
+        scored.withColumn("srn", S._rank("adc_score"))
         .filter(F.col("srn") <= IVFPQ_REFINE * 5)
         .select("query_id", "qu", "neighbor_id")
     )
     refined = shortlist.join(
         un.select(F.col("vec_id").alias("neighbor_id"), "u"), "neighbor_id"
     ).withColumn("score_raw", vec_dot(F.col("qu"), F.col("u")))
-    wf = W.partitionBy("query_id").orderBy(
-        F.col("score_raw").desc(), F.col("neighbor_id")
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(wf).cast("long"))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "query_id", "neighbor_id", "rank",
-            F.round("score_raw", 4).alias("score"),
-        )
-    )
+    return S._topk(refined, "score_raw", 5)
 
 
 def build_ivfpq_index(spark, root, name, cent_v, cb_v):
@@ -831,7 +746,7 @@ def build_ivfpq_index(spark, root, name, cent_v, cb_v):
     ONLY the quantizer parameters (centroids + codebooks — O(1), driver
     OK); the full corpus encodings (vec_id, cell, codes) are written as
     a PARQUET SIDE TABLE next to it by a distributed ``df.write``
-    (VERDICT r15 #2 — no encoding row ever passes through the driver),
+    (no encoding row ever passes through the driver),
     both published under one index commit so they time-travel, VACUUM,
     and refresh together. Queries never re-encode the corpus (the serve
     path joins ``spark.read.parquet(side)``), and refreshes touch only
@@ -839,15 +754,15 @@ def build_ivfpq_index(spark, root, name, cent_v, cb_v):
     from unfccc_documents_database_sandbox_spark.sources import snapshots as snap
 
     emb = snap.read(spark, root).select("vec_id", "embedding")
-    enc = _ivfpq_encode_plan(_ivfpq_unit(emb), cent_v, cb_v)
+    enc = _ivfpq_encode_plan(_units(emb), cent_v, cb_v)
     return snap.put_index(root, name,
                           {"cent": list(cent_v), "cb": list(cb_v)},
                           side_tables={"enc": enc})
 
 
 def refresh_ivfpq_index(spark, root, name):
-    """INCREMENTAL ANN index refresh over the change feed (VERDICT r14
-    #5 — the consumer X147's staleness measure was waiting for): read
+    """INCREMENTAL ANN index refresh over the change feed (the consumer
+    X147's staleness measure was waiting for): read
     `changes(since trained_at)`, re-encode ONLY the inserted rows under
     the artifact's pinned quantizer, drop deleted ids, merge into the
     persisted encodings, and publish the result as a new index commit
@@ -855,7 +770,7 @@ def refresh_ivfpq_index(spark, root, name):
     as its delete+insert pair and lands re-encoded; rows carried through
     COW rewrites cancel in the feed and are never touched.
 
-    The merge is a pure DATAFRAME plan (VERDICT r15 #2): old encodings
+    The merge is a pure DATAFRAME plan: old encodings
     = `spark.read.parquet(side table)`, kept = LEFT ANTI join against
     the netted feed's ids, merged = kept ∪ re-encoded slice, written
     back as the new commit's parquet side table by a distributed write.
@@ -891,7 +806,7 @@ def refresh_ivfpq_index(spark, root, name):
         return {"version": None, "reencoded": 0, "dropped": 0,
                 "kept": enc.count()}
     feed = snap.changes(spark, root, since, head)
-    # NET the feed per vec_id before touching the index (r15 review):
+    # NET the feed per vec_id before touching the index:
     # the window can hold MULTIPLE commits for one row — updated twice
     # emits two insert events (encoding both would keep a stale entry),
     # inserted-then-deleted emits an insert AND a later delete (merging
@@ -912,7 +827,7 @@ def refresh_ivfpq_index(spark, root, name):
     ins = last.filter(is_ins).select("vec_id", "embedding")
     # O(changed rows): the encode plan's input is the feed slice, which
     # by the CDF contract reads only commit-touched files
-    new_enc = _ivfpq_encode_plan(_ivfpq_unit(ins), art["cent"], art["cb"])
+    new_enc = _ivfpq_encode_plan(_units(ins), art["cent"], art["cb"])
     # every id with ANY final-commit event leaves the old encodings:
     # inserts re-enter freshly encoded, delete-only ids just leave
     changed_ids = last.select("vec_id").distinct()
@@ -942,7 +857,7 @@ def refresh_ivfpq_index(spark, root, name):
     """.format(_ivfpq_portable_oracle(where="vec_id % 10 <> 6")),
 )
 def sim_index_refresh(spark, sf_dir):
-    """INCREMENTAL index refresh end-to-end (VERDICT r14 #5): build the
+    """INCREMENTAL index refresh end-to-end: build the
     table from the EVEN embeddings and persist a full IVFADC index
     (encodings included), APPEND the odd half, DELETE vec_id % 10 = 6,
     then `refresh_ivfpq_index` — which re-encodes ONLY the change feed's
@@ -956,9 +871,6 @@ def sim_index_refresh(spark, sf_dir):
     tests/test_functions.py."""
     import os
 
-    from unfccc_documents_database_sandbox_spark.plans.ivfpq_codebook import (
-        IVFPQ_CB, IVFPQ_CENT,
-    )
     from unfccc_documents_database_sandbox_spark.sources import snapshots as snap
 
     repo_root = os.path.dirname(
@@ -1064,7 +976,7 @@ def _km_iter_sql(i: int) -> str:
 def cluster_kmeans(spark, sf_dir):
     """Distributed Lloyd k-means, INTEGER-EXACT end to end (the iterative-
     algorithm representative; the float sibling is what IVF training runs
-    on a bounded sample at operators/similarity.py:115): coordinates are
+    on a bounded sample in operators/similarity._lloyd): coordinates are
     quantized to 1e-6 fixed point, distances are exact bigint sums of
     squares in LONG format (vec_id, dim, x), the argmin tie-breaks to the
     lowest cid, and the centroid update is an exact integer floor
@@ -1162,7 +1074,7 @@ def cluster_kmeans(spark, sf_dir):
     """,
 )
 def sim_index_persisted(spark, sf_dir):
-    """ANN INDEX PERSISTED IN THE TABLE FORMAT (VERDICT r09 #4): the
+    """ANN INDEX PERSISTED IN THE TABLE FORMAT: the
     trained IVFADC index (coarse centroids + residual PQ codebooks) is
     stored as snapshot-table metadata via `snapshots.put_index` — a JSON
     artifact under data/ plus one data_change=False commit recording
@@ -1171,9 +1083,9 @@ def sim_index_persisted(spark, sf_dir):
     (v0), persist the index (trained_at pins v0), APPEND the odd half
     (v1), then answer top-k at BOTH versions with the ONE retrieved
     index (`get_index` + `_ivfpq_portable_plan`, the pinned-literal
-    portable pipeline now fed the index AS DATA). As of r16 the build
+    portable pipeline now fed the index AS DATA). The build
     also persists the corpus ENCODINGS as the commit's parquet side
-    table (build_ivfpq_index / VERDICT r15 #2), and the trained-version
+    table (build_ivfpq_index), and the trained-version
     leg serves FROM that table — no re-encode, no driver round-trip;
     the post-append leg's rows are not in the v0-trained side table
     (that is index STALENESS, refresh_ivfpq_index's job), so that leg
@@ -1195,9 +1107,6 @@ def sim_index_persisted(spark, sf_dir):
     O(changed), the FAISS build/serve split on a versioned table."""
     import os
 
-    from unfccc_documents_database_sandbox_spark.plans.ivfpq_codebook import (
-        IVFPQ_CB, IVFPQ_CENT,
-    )
     from unfccc_documents_database_sandbox_spark.sources import snapshots as snap
 
     repo_root = os.path.dirname(
@@ -1233,15 +1142,24 @@ def sim_index_persisted(spark, sf_dir):
     )
 
 
-# --- oracle-exact IVF twin (r15): pinned centroids close the last
-# trained-state gap in the ANN family — PQ (X76), IVFADC (X102), LSH
-# (r15 sim_topk_lsh_portable), and now plain IVF all replay in SQL. ---
+# --- oracle-exact IVF twin: pinned centroids close the last
+# trained-state gap in the ANN family — PQ, IVFADC, LSH and plain IVF
+# all replay in SQL. ---
 
-def _ivf_portable_oracle() -> str:
-    from unfccc_documents_database_sandbox_spark.plans.ivf_centroids import (
-        IVF_CELLS, IVF_DIM, cell, cell_sq,
+def _ivf_dists() -> F.Column:
+    """Per pinned IVF cell c, cc − 2·(u·c), with c·c folded at pin time
+    (ivf_centroids.cell_sq). Per-cell 64-element literals keep the plan
+    small: slicing one 512-element literal inside every term inlined the
+    full array 24x (17 s at sf0.1 on plan size alone)."""
+    return F.array(
+        *[
+            F.lit(cell_sq(c)) - 2.0 * vec_dot(F.col("u"), F.lit(cell(c)))
+            for c in range(IVF_CELLS)
+        ]
     )
 
+
+def _ivf_portable_oracle() -> str:
     def cent(c: int) -> str:
         return "[" + ", ".join(repr(v) for v in cell(c)) + "]"
 
@@ -1301,8 +1219,8 @@ def _ivf_portable_oracle() -> str:
 
 @register("sim_topk_ivf_portable", oracle=_ivf_portable_oracle())
 def sim_topk_ivf_portable(spark, sf_dir):
-    """The ORACLE-EXACT twin of sim_topk_ivf (VERDICT r14 rows-only
-    debt): the same assign → probe → in-cell exact-rank pipeline, with
+    """The ORACLE-EXACT twin of sim_topk_ivf: the same assign → probe →
+    in-cell exact-rank pipeline, with
     the centroids pinned as shared decimal literals
     (plans/ivf_centroids.py — the pq_codebook discipline) and every
     stage restated as fold arithmetic both engines execute identically:
@@ -1326,46 +1244,20 @@ def sim_topk_ivf_portable(spark, sf_dir):
     are the spread and the tiny probed equi-join, and the
     thrice-consumed assignment is localCheckpoint-pinned so the fold
     work runs once (the graph_bfs precedent)."""
-    from unfccc_documents_database_sandbox_spark.plans.ivf_centroids import (
-        IVF_CELLS, cell, cell_sq,
-    )
-
-    from unfccc_documents_database_sandbox_spark.catalog import spread
-
     # spread before the fold-heavy projection: the bench corpus is one
     # parquet row group, so without it 8 cells x 64-term interpreted
     # folds for every vector run on ONE core (13 s at sf0.1; ~0.6 s
     # spread across the session's parallelism). At production scale the
     # scan is already row-group-parallel and the exchange is redundant —
     # but it is a narrow shuffle of the compact input either way.
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    v = emb.select(
-        "vec_id", vec_to_double(F.col("embedding")).alias("vec")
-    ).withColumn("nrm", F.sqrt(vec_dot(F.col("vec"), F.col("vec"))))
-    un = v.select(
-        "vec_id", F.transform("vec", lambda x: x / F.col("nrm")).alias("u")
-    )
-
-    # per-cell literals + pin-time-folded c·c (ivf_centroids.cell_sq):
-    # the first cut sliced ONE 512-element literal inside every term,
-    # inlining the full array 24x into the plan — 17 s at sf0.1 on plan
-    # bloat alone; per-cell 64-element literals and constant cc bring
-    # the same arithmetic back to sub-second
-    dists = F.array(
-        *[
-            F.lit(cell_sq(c))
-            - 2.0 * vec_dot(F.col("u"), F.lit(cell(c)))
-            for c in range(IVF_CELLS)
-        ]
-    )
+    un = _units(spread(load_table(spark, sf_dir, "embeddings")))
     # localCheckpoint (the graph_bfs precedent): the assignment subtree
     # feeds THREE consumers — the streamed corpus side, the probe
     # derivation, and the broadcast build — and Spark has no cross-branch
     # subplan reuse, so without pinning it the interpreted fold work ran
     # three times (~12 s at sf0.1; ~3 s pinned)
-    assigned = un.withColumn("dl", dists).withColumn(
-        "cell",
-        (F.array_position(F.col("dl"), F.array_min("dl")) - 1).cast("int"),
+    assigned = un.withColumn("dl", _ivf_dists()).withColumn(
+        "cell", _argmin(F.col("dl")).cast("int")
     ).transform(pin)
 
     qprobe = (
@@ -1383,12 +1275,7 @@ def sim_topk_ivf_portable(spark, sf_dir):
             F.col("vec_id").alias("query_id"),
             F.col("u").alias("qu"),
             F.explode(
-                F.array(
-                    F.col("cell"),
-                    (
-                        F.array_position(F.col("dl2"), F.array_min("dl2")) - 1
-                    ).cast("int"),
-                )
+                F.array(F.col("cell"), _argmin(F.col("dl2")).cast("int"))
             ).alias("cell"),
         )
     )
@@ -1405,17 +1292,7 @@ def sim_topk_ivf_portable(spark, sf_dir):
         "neighbor_id",
         vec_dot(F.col("qu"), F.col("u")).alias("score_raw"),
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("score_raw").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "query_id", "neighbor_id", "rank",
-            F.round("score_raw", 4).alias("score"),
-        )
-    )
+    return S._topk(scored, "score_raw", 5)
 
 
 # --- hybrid retrieval: reciprocal-rank fusion of the BM25 lexical leg
@@ -1595,7 +1472,7 @@ def search_hybrid_rrf(spark, sf_dir):
     )
 
 
-# --- SemDeDup: semantic dedup via learned-cluster blocking (r15). ---
+# --- SemDeDup: semantic dedup via learned-cluster blocking. ---
 
 _SEMDEDUP_TAU = 0.9
 
@@ -1607,49 +1484,20 @@ def ivf_assign_units(emb):
     localCheckpoint-pinned: every consumer feeds the assignment into at
     least two plan branches (pair-join sides, final projection) and
     Spark has no cross-branch subplan reuse."""
-    from unfccc_documents_database_sandbox_spark.plans.ivf_centroids import (
-        IVF_CELLS,
-        cell,
-        cell_sq,
-    )
-
-    # r17 NEGATIVE result: spread(emb) before the argmin was A/B-measured
+    # NEGATIVE result: spread(emb) before the argmin was A/B-measured
     # SLOWER for both consumers (dedup_semantic 1.87 s -> 3.31 s,
     # corpus_curation_v2 4.53 s -> 14.4 s median of 7) — the 8-cell
     # argmin is cheap per row and the wider checkpoint partitioning
     # taxed every downstream cell join. Left unspread on evidence.
-    v = emb.select(
-        "vec_id", vec_to_double(F.col("embedding")).alias("vec")
-    ).withColumn("nrm", F.sqrt(vec_dot(F.col("vec"), F.col("vec"))))
-    un = v.select(
-        "vec_id", F.transform("vec", lambda x: x / F.col("nrm")).alias("u")
-    )
-    dists = F.array(
-        *[
-            F.lit(cell_sq(c)) - 2.0 * vec_dot(F.col("u"), F.lit(cell(c)))
-            for c in range(IVF_CELLS)
-        ]
-    )
     return (
-        un.withColumn("dl", dists)
-        .select(
-            "vec_id",
-            "u",
-            (F.array_position(F.col("dl"), F.array_min("dl")) - 1)
-            .cast("int")
-            .alias("cell"),
-        )
+        _units(emb)
+        .withColumn("dl", _ivf_dists())
+        .select("vec_id", "u", _argmin(F.col("dl")).cast("int").alias("cell"))
         .transform(pin)
     )
 
 
 def _semdedup_oracle() -> str:
-    from unfccc_documents_database_sandbox_spark.plans.ivf_centroids import (
-        IVF_CELLS,
-        cell,
-        cell_sq,
-    )
-
     def cent(c: int) -> str:
         return "[" + ", ".join(repr(v) for v in cell(c)) + "]"
 
@@ -1722,13 +1570,6 @@ def dedup_semantic(spark, sf_dir):
     shuffles once on cell; pair volume is sum of per-cell c^2, governed
     by cluster granularity (the paper's 50k clusters at LAION scale),
     never corpus^2. The drop set stays distributed (semi-join back)."""
-    from unfccc_documents_database_sandbox_spark.catalog import spread
-    from unfccc_documents_database_sandbox_spark.plans.ivf_centroids import (
-        IVF_CELLS,
-        cell,
-        cell_sq,
-    )
-
     emb = spread(_plant_near_dups(load_table(spark, sf_dir, "embeddings")))
     assigned = ivf_assign_units(emb)
     a = assigned.select(

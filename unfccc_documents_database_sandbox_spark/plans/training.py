@@ -380,7 +380,7 @@ def text_bigram_cond(spark, sf_dir):
 # pair-count aggregation whose 1-row argmax is collected to the driver and
 # baked into the next iteration's plan as a literal replace. The collect
 # is bounded by construction (K rows total, one per iteration — the
-# sim_topk_ivf Lloyd-training precedent at operators/similarity.py:146);
+# sim_topk_ivf Lloyd-training precedent, operators/similarity._lloyd);
 # the alternative, a K-deep lazy plan of dependent one-row crossJoins,
 # re-aggregates every prior iteration per merge (O(K^2) passes) and blows
 # up the lineage. BPE merges are inherently sequential — no engine avoids
