@@ -348,6 +348,173 @@ def test_ann_index_memo_reuses_the_fit_without_holding_sessions(spark):
     assert not any(isinstance(part, SparkSession) for key in PS._INDEX for part in key)
 
 
+def test_bounded_query_rows_reads_in_one_job(spark):
+    """_bounded_query_rows reads a multi-partition query frame in one job
+    (a collect() behind the limit scans the first partition, then the
+    rest in a second job)."""
+    from unfccc_documents_database_sandbox_spark.operators import similarity as S
+
+    data = spark.sparkContext.parallelize([(1, [1.0, 0.0]), (2, [0.0, 1.0])], 4)
+    queries = spark.createDataFrame(data, "vec_id bigint, embedding array<float>")
+    rows, jobs = _jobs_in_group(spark, lambda: S._bounded_query_rows(queries, "vec_id"))
+    assert jobs == 1
+    assert sorted(rows["vec_id"]) == [1, 2]
+
+
+def _exec_nodes(df) -> list:
+    """The nodes of ``df``'s executed physical plan, through adaptive
+    query stages but not into cached relations."""
+    out, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        out.append(node)
+        if name == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        else:
+            children = node.children()
+            todo += [children.apply(i) for i in range(children.size())]
+    return out
+
+
+def _ivf_inputs(spark):
+    from pyspark.sql import functions as F
+
+    from tests.conftest import SF_CORRECT
+    from unfccc_documents_database_sandbox_spark.catalog import load_table
+    from unfccc_documents_database_sandbox_spark.operators import similarity as S
+
+    emb = load_table(spark, SF_CORRECT, "embeddings")
+    cents = S.train_ivf_centroids(emb, n_cells=8, iters=8)
+    return emb, cents, lambda lo, hi: emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
+
+
+def test_ivf_index_is_built_once_and_requests_run_no_python(spark):
+    """ivf_topk builds the corpus's IVF index once: a second call over the
+    same corpus and centroids reads the held index, runs no Python UDF
+    and no more jobs than the first, and answers like a fresh build. No
+    index memo key holds a SparkSession or a DataFrame."""
+    from pyspark.sql import DataFrame, SparkSession
+
+    from unfccc_documents_database_sandbox_spark import catalog
+    from unfccc_documents_database_sandbox_spark.operators import similarity as S
+
+    catalog.release()
+    emb, cents, queries = _ivf_inputs(spark)
+
+    def request(lo, hi):
+        df = S.ivf_topk(emb, queries(lo, hi), k=5, nprobe=3, centroids=cents)
+        return df, df.collect()
+
+    (_, first), first_jobs = _jobs_in_group(spark, lambda: request(0, 5))
+    (index,) = S._IVF_INDEX.values()
+    (second, rows), second_jobs = _jobs_in_group(spark, lambda: request(5, 10))
+    (again,) = S._IVF_INDEX.values()
+    assert again is index and catalog.is_held(index)
+    names = [node.nodeName() for node in _exec_nodes(second)]
+    assert "InMemoryTableScan" in names
+    assert not {"ArrowEvalPython", "BatchEvalPython"} & set(names), names
+    assert second_jobs <= first_jobs
+    assert not any(
+        isinstance(part, (SparkSession, DataFrame)) for key in S._IVF_INDEX for part in key
+    )
+    catalog.release()
+    fresh = S.ivf_topk(emb, queries(5, 10), k=5, nprobe=3, centroids=cents).collect()
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, fresh))
+    assert len(first) == 25
+
+
+def test_ivf_index_is_rebuilt_after_release(spark):
+    """An index lives until catalog.release() (each registry build): the
+    next call after it builds and holds a new index and returns the same
+    rows."""
+    from unfccc_documents_database_sandbox_spark import catalog
+    from unfccc_documents_database_sandbox_spark.operators import similarity as S
+
+    emb, cents, queries = _ivf_inputs(spark)
+    q = queries(0, 5)
+    before = S.ivf_topk(emb, q, k=5, nprobe=3, centroids=cents).collect()
+    old = next(iter(S._IVF_INDEX.values()))
+    catalog.release()
+    assert not catalog.is_held(old)
+    after = S.ivf_topk(emb, q, k=5, nprobe=3, centroids=cents).collect()
+    new = next(iter(S._IVF_INDEX.values()))
+    assert len(S._IVF_INDEX) == 1 and new is not old and catalog.is_held(new)
+    assert sorted(map(tuple, after)) == sorted(map(tuple, before))
+
+
+def test_ivf_empty_query_frame_returns_no_rows(spark):
+    from unfccc_documents_database_sandbox_spark.operators import similarity as S
+
+    emb, cents, queries = _ivf_inputs(spark)
+    out = S.ivf_topk(emb, queries(-5, 0), k=5, nprobe=3, centroids=cents)
+    assert out.columns == ["query_id", "neighbor_id", "rank", "score"]
+    assert out.count() == 0
+
+
+def test_ivf_scan_skips_the_batches_of_unprobed_cells(spark):
+    """The index is sorted by cell within each partition, so with small
+    cached column batches a one-query, two-cell probe reads well under
+    half of the index, and answers as with default batches."""
+    from unfccc_documents_database_sandbox_spark import catalog
+    from unfccc_documents_database_sandbox_spark.operators import similarity as S
+
+    emb, cents, queries = _ivf_inputs(spark)
+    q = queries(0, 1)
+    catalog.release()
+    default = S.ivf_topk(emb, q, k=5, nprobe=2, centroids=cents).collect()
+    catalog.release()
+    spark.conf.set("spark.sql.inMemoryColumnarStorage.batchSize", "64")
+    try:
+        out = S.ivf_topk(emb, q, k=5, nprobe=2, centroids=cents)
+        rows = out.collect()
+    finally:
+        spark.conf.unset("spark.sql.inMemoryColumnarStorage.batchSize")
+        catalog.release()
+    (scan,) = [node for node in _exec_nodes(out) if node.nodeName() == "InMemoryTableScan"]
+    read = scan.metrics().apply("numOutputRows").value()
+    assert 0 < read < emb.count() / 2, read
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, default))
+
+
+def test_ivf_query_norm_is_the_jvm_fold(spark):
+    """ivf_topk's literal qnorm (_fold_norm) is bit-equal to the JVM
+    ``norm`` fold that _side computes, so its scores and tie order equal
+    the join-based cosine."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from unfccc_documents_database_sandbox_spark.operators import similarity as S
+
+    emb, _, _ = _ivf_inputs(spark)
+    side = S._side(emb.filter(F.col("vec_id") < 200), "vec_id", "query_id", "q").collect()
+    for r in side:
+        assert S._fold_norm(np.array(r.qvec, dtype="float64")) == r.qnorm, r.query_id
+
+
+def test_declared_corpus_schemas_match_the_parquet_footers(spark):
+    """load_table reads documents and embeddings with schemas.CORPUS
+    instead of inferring; the declared schema must equal the inferred one
+    on every dataset the engine and its benchmark read."""
+    import os
+
+    from tests.conftest import REPO_ROOT, SF_CORRECT, SF_SMOKE
+    from unfccc_documents_database_sandbox_spark.catalog import table_path
+    from unfccc_documents_database_sandbox_spark.schemas import CORPUS
+
+    dirs = [SF_SMOKE, SF_CORRECT, os.path.join(os.path.dirname(SF_CORRECT), "sf0.1"),
+            os.path.join(REPO_ROOT, "perfbench", "data")]
+    checked = 0
+    for d in dirs:
+        for name in ("documents", "embeddings"):
+            if os.path.exists(table_path(d, name)):
+                assert spark.read.parquet(table_path(d, name)).schema == CORPUS[name], (d, name)
+                checked += 1
+    assert checked >= 4
+
+
 def test_observation_metrics_ride_the_action(spark):
     """Operational-metrics surface (df.observe + Observation): audit
     counters computed DURING the action — zero extra scans, exactly what

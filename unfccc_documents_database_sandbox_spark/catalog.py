@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from unfccc_documents_database_sandbox_spark.schemas import CORPUS
+
 TABLES: tuple[str, ...] = (
     "region",
     "nation",
@@ -26,6 +28,11 @@ TABLES: tuple[str, ...] = (
     "documents",
     "embeddings",
 )
+
+# tables read with their declared ``schemas.CORPUS`` schema, which equals
+# their parquet footers (int64 ids, list<float>, int32 label): passing it
+# skips the schema-inference job
+_DECLARED = ("documents", "embeddings")
 
 # Session-scoped memo of analyzed DataFrames keyed by (session, sf_dir,
 # table). spark.read.parquet() lists files and reads footers eagerly on the
@@ -162,7 +169,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # only in our session factory — callers (e.g. the driver harness) may
         # hand us a session they built themselves.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    reader = spark.read
+    if name in _DECLARED:
+        reader = reader.schema(CORPUS[name])
+    df = reader.parquet(table_path(sf_dir, name))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # events.ts is parquet TIMESTAMP(NANOS): read as raw nanos
         # (spark.sql.legacy.parquet.nanosAsLong) and truncate to micros —
@@ -200,6 +210,12 @@ def hold(df: DataFrame) -> DataFrame:
     df = df.persist()
     _HELD.append(df)
     return df
+
+
+def is_held(df: DataFrame) -> bool:
+    """True while ``df`` is a frame ``hold`` returned that no ``release``
+    has unpersisted since."""
+    return any(h is df for h in _HELD)
 
 
 def release() -> None:
